@@ -294,12 +294,16 @@ def minhash_band_buckets(
     id_col: str = "doc_id",
     bands: int = 4,
     rows_per_band: int = 4,
+    keep: tuple[str, ...] = (),
 ) -> DataFrame:
     """Explode each doc into (band, bucket) keys: bucket = h64 of the
     band's signature slice.  Docs sharing any (band, bucket) are
-    candidate duplicates."""
+    candidate duplicates.  ``keep`` columns ride along on every band
+    row (the index carries the shingle set this way, without a join
+    back to the signatures)."""
     bucketed = sig_df.select(
         id_col,
+        *keep,
         F.posexplode(
             F.transform(
                 F.sequence(F.lit(0), F.lit(bands - 1)),
@@ -742,6 +746,61 @@ def embedding_dedup(
 # incremental dedup against a persisted corpus index
 # ---------------------------------------------------------------------------
 
+def _index_rows(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    num_hashes: int,
+    bands: int,
+    ngram: int,
+) -> DataFrame:
+    """The index row builder: ``(id, band, bucket, sh, num_hashes,
+    bands, ngram)``, one row per doc per band.  The index, a probe and
+    the streaming gate's append all take their rows from here, so a
+    batch hashed once can be probed and appended without re-hashing."""
+    docs = _minhash_docs(df, text_col, id_col, num_hashes, ngram)
+    return minhash_band_buckets(
+        docs, id_col, bands, _rows_per_band(num_hashes, bands), keep=("sh",)
+    ).select(
+        id_col, "band", "bucket", "sh",
+        F.lit(num_hashes).alias("num_hashes"),
+        F.lit(bands).alias("bands"),
+        F.lit(ngram).alias("ngram"),
+    )
+
+
+def _write_index(rows: DataFrame, path: str, mode: str) -> None:
+    """Write index rows hive-partitioned by ``band``.  The repartition
+    on (band, bucket) lets AQE coalesce a small batch to one writer
+    task, so an append adds about one file per band instead of one per
+    shuffle partition, while a large batch keeps its width.  An empty
+    ``rows`` writes no data file."""
+    rows.repartition("band", "bucket").write.mode(mode).partitionBy("band").parquet(path)
+
+
+def _probe_index(rows: DataFrame, index: DataFrame, id_col: str, threshold: float) -> DataFrame:
+    """``(new_id, dup_of, jaccard)`` for every pair of a batch's index
+    rows and an indexed doc that share a (band, bucket) and reach
+    ``threshold`` exact Jaccard on their shingle sets.  A pair that
+    collides in several bands appears once per shared band: callers
+    that need unique pairs deduplicate the (small) verified output,
+    so no shuffle ever carries the shingle arrays, and a caller that
+    only anti-joins on ``new_id`` needs no shuffle at all."""
+    n = rows.select(
+        F.col(id_col).alias("new_id"),
+        F.col("band"), F.col("bucket"), F.col("sh").alias("sh_n"),
+    )
+    ix = index.select(
+        F.col(id_col).alias("dup_of"),
+        F.col("band"), F.col("bucket"), F.col("sh").alias("sh_i"),
+    )
+    return (
+        n.join(ix, on=["band", "bucket"])
+        .select("new_id", "dup_of", jaccard(F.col("sh_n"), F.col("sh_i")).alias("jaccard"))
+        .where(F.col("jaccard") >= threshold)
+    )
+
+
 def build_minhash_index(
     df: DataFrame,
     path: str | None = None,
@@ -763,7 +822,8 @@ def build_minhash_index(
     each accepted batch; ``dedup_against_index`` then probes new
     batches WITHOUT recomputing the corpus.  With ``path`` the index is
     written to parquet (hive-partitioned by ``band`` so a probe prunes
-    to the bands it needs; bucket co-location would additionally need
+    to the bands it needs, about one file per band for a small corpus;
+    bucket co-location would additionally need
     ``write_bucketed``/``bucketBy``, which requires a metastore table)
     and the RETURNED DataFrame reads from that path — so downstream
     probes scan the materialized index, never the corpus recompute
@@ -772,24 +832,12 @@ def build_minhash_index(
 
     ``mode`` follows Spark save-mode semantics and defaults to
     ``overwrite`` for the one-time full build; the incremental append
-    step is ``mode="append"`` (or take ``path=None`` and drive the
-    write yourself, as the streaming gate does) — pointing an
-    overwrite build at a live index replaces the whole corpus index
-    with just this batch, so incremental callers must be explicit."""
-    rows_per_band = _rows_per_band(num_hashes, bands)
-    docs = _minhash_docs(df, text_col, id_col, num_hashes, ngram)
-    idx = (
-        minhash_band_buckets(docs, id_col, bands, rows_per_band)
-        .join(docs.select(id_col, "sh"), id_col)
-        .select(
-            "*",
-            F.lit(num_hashes).alias("num_hashes"),
-            F.lit(bands).alias("bands"),
-            F.lit(ngram).alias("ngram"),
-        )
-    )
+    step is ``mode="append"`` — pointing an overwrite build at a live
+    index replaces the whole corpus index with just this batch, so
+    incremental callers must be explicit."""
+    idx = _index_rows(df, text_col, id_col, num_hashes, bands, ngram)
     if path is not None:
-        idx.write.mode(mode).partitionBy("band").parquet(path)
+        _write_index(idx, path, mode)
         return df.sparkSession.read.parquet(path)
     return idx
 
@@ -801,8 +849,9 @@ def _check_index_params(index: DataFrame, num_hashes: int, bands: int, ngram: in
     index is nondeterministic and would pass an index accidentally
     appended with different settings, the silent-under-match failure
     this guard exists to make loud.  The distinct frame is index-tiny
-    (one row per triple ever written); indexes from before the params
-    were recorded (no such columns) are accepted as-is."""
+    (one row per triple ever written), but computing it scans the
+    index; indexes from before the params were recorded (no such
+    columns) are accepted as-is."""
     cols = set(index.columns)
     if not {"num_hashes", "bands", "ngram"} <= cols:
         return
@@ -843,37 +892,19 @@ def dedup_against_index(
     from shared LSH band buckets, so the join is an equi-join on
     (band, bucket), never all-pairs).
 
-    The incremental path: cost is O(batch × bands) shuffle rows probed
-    into the index — the corpus itself is never rescanned.  Filter the
-    batch with a left-anti on ``new_id`` to accept only novel docs.
+    The incremental path: the corpus is never re-hashed — the probe
+    costs one scan of the index plus O(batch × bands) shuffle rows
+    joined into it.  Filter the batch with a left-anti on ``new_id``
+    to accept only novel docs.
 
     Probe parameters are validated against the ones recorded in the
     index (``ValueError`` on mismatch — mismatched bucketing would
-    silently find nothing)."""
+    silently find nothing).  The check is one more scan of the index
+    per call; :func:`~rheoceros_spark.streaming.stream.stream_dedup_against_index`
+    runs it once, on its first micro-batch."""
     _check_index_params(index, num_hashes, bands, ngram)
-    rows_per_band = _rows_per_band(num_hashes, bands)
-    new_docs = _minhash_docs(new_df, text_col, id_col, num_hashes, ngram)
-    new_buckets = minhash_band_buckets(new_docs, id_col, bands, rows_per_band).join(
-        new_docs.select(id_col, "sh"), id_col
-    )
-    n = new_buckets.select(
-        F.col(id_col).alias("new_id"),
-        F.col("band"), F.col("bucket"), F.col("sh").alias("sh_n"),
-    )
-    ix = index.select(
-        F.col(id_col).alias("dup_of"),
-        F.col("band"), F.col("bucket"), F.col("sh").alias("sh_i"),
-    )
-    cand = (
-        n.join(ix, on=["band", "bucket"])
-        .select("new_id", "dup_of", "sh_n", "sh_i")
-        .dropDuplicates(["new_id", "dup_of"])
-    )
-    return (
-        cand.withColumn("jaccard", jaccard(F.col("sh_n"), F.col("sh_i")))
-        .where(F.col("jaccard") >= threshold)
-        .select("new_id", "dup_of", "jaccard")
-    )
+    rows = _index_rows(new_df, text_col, id_col, num_hashes, bands, ngram)
+    return _probe_index(rows, index, id_col, threshold).dropDuplicates(["new_id", "dup_of"])
 
 
 def substring_dup_spans(

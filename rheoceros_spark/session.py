@@ -27,11 +27,13 @@ _DEFAULT_CONFS: dict[str, str] = {
     # floor taxes EVERY small shuffle with full-width tiny tasks —
     # measured on dedup_winnow_spans (six small exchanges in sequence):
     # 6.7-8.1 s with the floor vs 4.1-4.2 s at the 1 MB default, the
-    # r14 round's only real regression.  The pair joins now pin their
-    # own width with an explicit AQE-proof repartition on the salted
-    # join keys (see semantic_dup_pairs / icp_order), which fires only
-    # in the salted small-k regime, so the global default coalescing
-    # behavior is restored for everything else.
+    # r14 round's only real regression.  The pair joins now keep their
+    # own width through the salt itself: ``salt=None`` derives it from
+    # 4x cluster width over k (capped at 32), and the b-side explode
+    # multiplies the salted exchange's bytes enough that AQE's default
+    # byte-based coalescing leaves it wide (see semantic_dup_pairs /
+    # icp_order).  No explicit repartition pins the width, so default
+    # coalescing applies everywhere.
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # Mirrors HIGH_THROUGHPUT_SPARK_AQE_CONFIGS (reference utils/spark.py:94-102)
     "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "5",
@@ -43,9 +45,9 @@ _DEFAULT_CONFS: dict[str, str] = {
     # can't silently disable them.
     "spark.sql.parquet.filterPushdown": "true",
     "spark.sql.parquet.aggregatePushdown": "true",
-    # Reference sets parallelPartitionDiscovery.threshold=1
-    # (utils/spark.py:89) so many-partition reads list in parallel.
-    "spark.sql.sources.parallelPartitionDiscovery.threshold": "1",
+    # parallelPartitionDiscovery.threshold stays at Spark's 32: the reference's =1
+    # (utils/spark.py:89) adds a listing job to each multi-path read (a route event
+    # 13 → 14 jobs; an idle file stream ~43 per 3 s).  Opt in via extra_confs.
     # ContextCleaner only reclaims broadcast/shuffle/cache blocks when
     # the DRIVER JVM garbage-collects, and a large mostly-idle heap can
     # go hours without a full GC — accumulated blocks then degrade

@@ -233,7 +233,9 @@ def stream_dedup_against_index(
     id_col: str = "doc_id",
     threshold: float = 0.5,
     trigger_available_now: bool = False,
-    **mh_kwargs,
+    num_hashes: int = 16,
+    bands: int = 4,
+    ngram: int = 3,
 ):
     """Continuous-ingest near-dup gate: each micro-batch probes the
     persisted MinHash band-bucket index (see
@@ -242,12 +244,21 @@ def stream_dedup_against_index(
     the index — so later batches (and later docs in the stream) dedup
     against everything accepted so far, not just the initial corpus.
 
-    Scale shape: per micro-batch cost is O(batch × bands) probe rows
-    against an index equi-join — the accumulated corpus is never
-    rescanned; the index grows by one append per batch.  Exactly-once
-    is inherited from foreachBatch checkpointing **as long as**
-    ``accept`` is idempotent (e.g. partition overwrite keyed on
-    batch_id); the index append itself is made idempotent with a
+    Scale shape: a micro-batch is hashed once into its
+    ``(id, band, bucket, sh)`` index rows; the probe joins those rows
+    against one scan of the index (O(batch × bands) probe rows, the
+    accumulated corpus is never re-hashed), and the append writes the
+    same rows minus the duplicates — about one file per band per
+    batch.  The index parameters are checked once, on the first
+    micro-batch (``ValueError`` on a mismatch, surfaced through
+    ``query.exception()``); later batches read the index with the
+    schema that check saw, so they run no schema-inference or
+    parameter job, and the gate's own appends carry the same
+    parameters by construction.
+
+    Exactly-once is inherited from foreachBatch checkpointing **as
+    long as** ``accept`` is idempotent (e.g. partition overwrite keyed
+    on batch_id); the index append itself is made idempotent with a
     per-batch marker under ``<index_path>/_batches/`` (underscore
     dirs are invisible to parquet readers, like ``_SUCCESS``): a
     replayed batch re-probes and re-``accept``s, but skips the append,
@@ -257,28 +268,42 @@ def stream_dedup_against_index(
     mutable external table — a shape Structured Streaming's stateful
     operators don't express (state here is the *index*, owned by the
     pipeline, not per-key operator state)."""
-    from rheoceros_spark.operators.dedup import build_minhash_index, dedup_against_index
+    from rheoceros_spark.operators.dedup import (
+        _check_index_params,
+        _index_rows,
+        _probe_index,
+        _write_index,
+    )
+
+    index_schema: Optional[StructType] = None  # set by the first batch's check
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
+        nonlocal index_schema
         spark = batch_df.sparkSession
-        index = spark.read.parquet(index_path)
-        dups = dedup_against_index(
-            batch_df, index, text_col=text_col, id_col=id_col,
-            threshold=threshold, **mh_kwargs,
-        )
-        # A replayed batch whose append already landed would self-match
+        if index_schema is not None:
+            index = spark.read.schema(index_schema).parquet(index_path)
+        else:
+            index = spark.read.parquet(index_path)
+            _check_index_params(index, num_hashes, bands, ngram)
+            index_schema = index.schema
+        # The batch is read once, hashed once and probed once: `accept`
+        # and the append both reuse these three cached frames.  A
+        # replayed batch whose append already landed would self-match
         # at jaccard 1.0; dropping identity matches keeps `novel` (and
         # hence what `accept` sees) identical between the original run
-        # and the replay.
-        losers = dups.where(F.col("new_id") != F.col("dup_of")).select(
-            F.col("new_id").alias(id_col)
-        ).distinct()
-        # the probe join is the dominant per-batch cost and `novel` is
-        # consumed up to three times (accept, emptiness check, index
-        # append) — materialize it once
-        novel = batch_df.join(losers, on=id_col, how="left_anti").persist()
+        # and the replay.  `losers` may repeat an id (one row per
+        # shared band), which an anti-join ignores.
+        rows = _index_rows(batch_df, text_col, id_col, num_hashes, bands, ngram)
+        losers = (
+            _probe_index(rows, index, id_col, threshold)
+            .where(F.col("new_id") != F.col("dup_of"))
+            .select(F.col("new_id").alias(id_col))
+        )
+        cached = (batch_df, rows, losers)
+        for df in cached:
+            df.persist()
         try:
-            accept(novel, batch_id)
+            accept(batch_df.join(losers, on=id_col, how="left_anti"), batch_id)
             # markers must go through the Hadoop FS: on an object-store
             # index_path os.path would never see them and every replay
             # would re-append the batch (the exact duplication the
@@ -290,13 +315,11 @@ def stream_dedup_against_index(
             marker = index_path.rstrip("/") + "/_batches/" + str(batch_id)
             if _fs_exists(spark, marker):
                 return  # replay: this batch's rows are already in the index
-            if novel.limit(1).count() > 0:
-                build_minhash_index(
-                    novel, text_col=text_col, id_col=id_col, **mh_kwargs
-                ).write.mode("append").partitionBy("band").parquet(index_path)
+            _write_index(rows.join(losers, on=id_col, how="left_anti"), index_path, "append")
             save_content(spark, b"", marker)
         finally:
-            novel.unpersist()
+            for df in cached:
+                df.unpersist()
 
     writer = sdf.writeStream.foreachBatch(handle).option(
         "checkpointLocation", checkpoint_dir

@@ -351,6 +351,150 @@ def test_incremental_index_equals_batch_rebuilt_index(spark, tmp_path):
     assert canon(spark.read.parquet(inc_path)) == canon(rebuilt)
 
 
+def _run_dedup_stream(spark, src, idx_path, ckpt, accepted, **kwargs):
+    """Drain ``src`` through ``stream_dedup_against_index`` with one file
+    per micro-batch; ``accepted`` collects the novel ids per batch."""
+    from rheoceros_spark.streaming.stream import stream_dedup_against_index
+
+    sdf = (
+        spark.readStream.schema("doc_id bigint, text string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src / "*"))
+    )
+    return stream_dedup_against_index(
+        sdf,
+        idx_path,
+        checkpoint_dir=ckpt,
+        accept=lambda df, bid: accepted.setdefault(bid, []).extend(
+            r.doc_id for r in df.collect()
+        ),
+        trigger_available_now=True,
+        **kwargs,
+    ).start()
+
+
+def _band_files(idx_path):
+    return {
+        os.path.basename(d): sorted(glob.glob(os.path.join(d, "*.parquet")))
+        for d in glob.glob(os.path.join(idx_path, "band=*"))
+    }
+
+
+def _write_batches(spark, src, batches):
+    import time
+
+    src.mkdir()
+    for i, (name, rows) in enumerate(batches):
+        if i:
+            time.sleep(1.1)  # distinct mtimes → deterministic file order
+        spark.createDataFrame(rows, "doc_id bigint, text string").coalesce(1).write.parquet(
+            str(src / name)
+        )
+
+
+def test_stream_dedup_against_index_replays_idempotently(spark, tmp_path):
+    """Re-running the same source with a fresh checkpoint re-delivers
+    every batch: ``accept`` must see the same novel ids, and the
+    per-batch markers must keep the index from growing — still
+    ``bands`` rows per indexed doc, no new file in any band directory.
+    Each append also adds at most one file per band."""
+    from rheoceros_spark.operators.dedup import build_minhash_index
+
+    base = "the quick brown fox jumps over the lazy dog every single day"
+    novel1 = "completely new content about adaptive query execution in spark"
+    novel2 = "vectorized parquet readers amortize decoding across row groups"
+
+    def fillers(first, n):
+        return [(first + i, f"filler document {first + i} about w{i}a w{i}b w{i}c w{i}d")
+                for i in range(n)]
+
+    corpus = [(1, base)] + fillers(10, 40)
+    fresh = fillers(200, 30)  # enough novel rows that a wide append would split
+    idx_path = str(tmp_path / "index")
+    build_minhash_index(
+        spark.createDataFrame(corpus, "doc_id bigint, text string"), path=idx_path
+    )
+    built = _band_files(idx_path)
+    assert len(built) == 4 and all(len(f) == 1 for f in built.values()), built
+
+    src = tmp_path / "src"
+    _write_batches(spark, src, [("a", [(100, base), (101, novel1)] + fresh),
+                                ("b", [(102, novel1), (103, novel2)])])
+    expected = {0: sorted([101] + [d for d, _ in fresh]), 1: [103]}
+
+    first: dict[int, list[int]] = {}
+    _run_dedup_stream(spark, src, idx_path, str(tmp_path / "ckpt_a"), first).awaitTermination(180)
+    assert {b: sorted(ids) for b, ids in first.items()} == expected
+    grown = _band_files(idx_path)
+    assert grown.keys() == built.keys()
+    assert all(len(grown[b]) <= len(built[b]) + 2 for b in built), grown
+
+    def rows_per_doc():
+        idx = spark.read.parquet(idx_path)
+        return {r.doc_id: r.n for r in idx.groupBy("doc_id").agg(F.count("*").alias("n")).collect()}
+
+    indexed = {d for d, _ in corpus} | set(expected[0]) | {103}
+    assert rows_per_doc() == {d: 4 for d in indexed}
+
+    replay: dict[int, list[int]] = {}
+    _run_dedup_stream(spark, src, idx_path, str(tmp_path / "ckpt_b"), replay).awaitTermination(180)
+    assert {b: sorted(ids) for b, ids in replay.items()} == expected
+    assert rows_per_doc() == {d: 4 for d in indexed}
+    assert _band_files(idx_path) == grown
+
+
+def test_stream_dedup_all_duplicate_batch_writes_marker_only(spark, tmp_path):
+    """A batch whose every doc is a known duplicate appends no data
+    file, but its ``_batches/<id>`` marker still lands, so a replay
+    skips it like any other batch."""
+    from rheoceros_spark.operators.dedup import build_minhash_index
+
+    base = "the quick brown fox jumps over the lazy dog every single day"
+    other = "unrelated corpus filler text entirely about something else"
+    idx_path = str(tmp_path / "index")
+    build_minhash_index(
+        spark.createDataFrame([(1, base), (2, other)], "doc_id bigint, text string"),
+        path=idx_path,
+    )
+    before = _band_files(idx_path)
+
+    src = tmp_path / "src"
+    _write_batches(spark, src, [("a", [(100, base), (101, other)])])
+    accepted: dict[int, list[int]] = {}
+    _run_dedup_stream(spark, src, idx_path, str(tmp_path / "ckpt"), accepted).awaitTermination(180)
+
+    assert accepted == {0: []}
+    assert os.path.exists(os.path.join(idx_path, "_batches", "0"))
+    assert _band_files(idx_path) == before
+    assert not glob.glob(os.path.join(idx_path, "*.parquet"))
+
+
+def test_stream_dedup_param_mismatch_fails_first_batch(spark, tmp_path):
+    """A stream probing an index built with other (num_hashes, bands,
+    ngram) fails on its first batch with the index guard's ValueError,
+    before anything is accepted or appended."""
+    from rheoceros_spark.operators.dedup import build_minhash_index
+
+    idx_path = str(tmp_path / "index")
+    build_minhash_index(
+        spark.createDataFrame([(1, "a b c d e f g h")], "doc_id bigint, text string"),
+        path=idx_path,
+        bands=8,
+    )
+    before = _band_files(idx_path)
+
+    src = tmp_path / "src"
+    _write_batches(spark, src, [("a", [(100, "a b c d e f g h")])])
+    accepted: dict[int, list[int]] = {}
+    q = _run_dedup_stream(spark, src, idx_path, str(tmp_path / "ckpt"), accepted, bands=4)
+    with pytest.raises(Exception):
+        q.awaitTermination(180)
+    assert "built with" in str(q.exception())
+    assert accepted == {}
+    assert _band_files(idx_path) == before
+    assert not os.path.exists(os.path.join(idx_path, "_batches"))
+
+
 def test_stream_quality_gate_matches_batch_and_replays_idempotently(spark, sf_dir, tmp_path):
     """The streaming gate must agree row-for-row with the batch funnel's
     row-local stages, and a replay from a fresh checkpoint must
