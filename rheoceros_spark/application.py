@@ -1389,7 +1389,9 @@ class Application:
             raise
         finally:
             restore_confs(self.spark, conf_snapshot)
-            self.spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+            # the whole group (id, description, interruptOnCancel) — the
+            # next execution's first job must not carry this one's label
+            self.spark.sparkContext._jsc.clearJobGroup()
             self._kill_requested.discard(key)
 
         record.state = ComputeRecordState.COMPLETED

@@ -39,6 +39,7 @@ from rheoceros_spark.functions.portable import (
     tokens,
     word_ngrams,
 )
+from rheoceros_spark.operators.scale import checkpoint, collect_local, observed_checkpoint
 
 # ---------------------------------------------------------------------------
 # deterministic sampling
@@ -536,18 +537,12 @@ def dup_clusters(
     labels would under-merge."""
     import warnings
 
-    from rheoceros_spark.operators.scale import checkpoint_with_metrics
-
     e = pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
     # the edge frame stays a LAZY checkpoint: the initial-labels
     # materialization right below runs through it and caches its blocks
-    edges = e.union(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(eager=False)
-    # r15: the emptiness probe rides the materializing pass (observe)
-    # instead of a separate isEmpty() job — same discipline as the
-    # per-round convergence fusion below
-    labels, (n_nodes,) = checkpoint_with_metrics(
+    edges = checkpoint(e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))))
+    # the emptiness probe rides the initial labels' materializing pass
+    labels, (n_nodes,) = observed_checkpoint(
         edges.select("u")
         .distinct()
         .select(F.col("u").alias("node"), F.col("u").alias("label")),
@@ -565,12 +560,8 @@ def dup_clusters(
             .groupBy("u")
             .agg(F.min("label").alias("nl"))
         )
-        # r15: the convergence hash-sum is computed IN the pass that
-        # materializes the round's labels (checkpoint_with_metrics) —
-        # the old shape paid a separate agg().collect() that re-read
-        # the whole labels frame per round (a corpus-sized pass at
-        # 100 TB) plus its planning and job scheduling
-        labels, (cur_sum,) = checkpoint_with_metrics(
+        # the convergence hash-sum rides the round's materializing pass
+        labels, (cur_sum,) = observed_checkpoint(
             labels.join(neigh_min, labels["node"] == neigh_min["u"], "left")
             .select(
                 "node",
@@ -653,11 +644,8 @@ def dup_clusters_star(
     Convergence = hash-sum equality of the canonical edge set (one
     scalar agg, type-agnostic — same scheme as :func:`dup_clusters`).
     """
-    from rheoceros_spark.operators.scale import checkpoint_with_metrics
-
-    # r15: emptiness probe fused into the materializing pass (observe),
-    # replacing the lazy checkpoint + isEmpty() job pair
-    e, (n_edges,) = checkpoint_with_metrics(
+    # the emptiness probe rides the edge frame's materializing pass
+    e, (n_edges,) = observed_checkpoint(
         pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
         .where(F.col("u") != F.col("v"))
         .distinct(),
@@ -689,10 +677,8 @@ def dup_clusters_star(
             F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
         ).distinct()
         m_sm = oriented.groupBy("u").agg(F.min("v").alias("m"))
-        # r15: convergence hash-sum fused into the round's
-        # materializing pass — no separate agg().collect() re-reading
-        # the edge frame (see dup_clusters)
-        e, (cur_sum,) = checkpoint_with_metrics(
+        # the convergence hash-sum rides the round's materializing pass
+        e, (cur_sum,) = observed_checkpoint(
             oriented.join(m_sm, "u")
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .union(m_sm.select(F.col("u"), F.col("m").alias("v")))
@@ -1077,14 +1063,9 @@ def dsir_weights(
     t_counts = feats(target).groupBy("bkt").agg(F.count(F.lit(1)).alias("__tc"))
     raw_feats = feats(raw)
     # two consumers (the bucket totals and the per-doc scoring join)
-    # branch from the per-doc aggregate — without materialization the
-    # raw-side n-gram explode + hash pass runs TWICE (r14, the
-    # minhash_lsh_pairs rationale; the checkpointed rows are narrow
-    # (id, bkt, n) triples)
-    per_doc = (
-        raw_feats.groupBy(id_col, "bkt")
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .localCheckpoint(eager=False)
+    # branch from the narrow (id, bkt, n) per-doc aggregate
+    per_doc = checkpoint(
+        raw_feats.groupBy(id_col, "bkt").agg(F.count(F.lit(1)).alias("__n"))
     )
     r_counts = per_doc.groupBy("bkt").agg(F.sum("__n").alias("__rc"))
     t_total = t_counts.agg(F.sum("__tc").alias("__T"))
@@ -1852,7 +1833,7 @@ def cluster_profile(
     base = emb.where(F.col(vec_id_col).isNotNull()).select(vec_id_col, vec_col)
     if cents is None:
         cents = kmeans_centroids(base, k, iters, vec_col, vec_id_col)
-    cents = cents.localCheckpoint(eager=False)
+    cents = checkpoint(cents)
     assigned = ivf_assign(base, k, vec_col, vec_id_col, cents=cents).select(
         F.col(vec_id_col).alias(doc_id_col), "cell"
     )
@@ -2305,12 +2286,10 @@ def corpus_datasheet(
             F.col("__rawtok").cast("bigint")
         ),
     )
-    # three aggregates consume this projection; materialize it lazily
-    # ONCE so the corpus (and the heavy text-column decode feeding the
-    # fingerprint/token expressions) is scanned a single time — the
-    # checkpointed frame is the NARROW (group, lang, 32-byte fp,
-    # counters) shape, ~1-2% of corpus bytes
-    d = d.localCheckpoint(eager=False)
+    # three aggregates consume this projection; the checkpointed frame
+    # is the NARROW (group, lang, 32-byte fp, counters) shape, ~1-2% of
+    # corpus bytes
+    d = checkpoint(d)
     base = d.groupBy(group_col).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum(F.when(F.col("__nlen") == 0, 1).otherwise(0))
@@ -2442,11 +2421,10 @@ def snapshot_drift(
         ).alias("feature", "value"),
     )
     # the shift-join reads the histogram twice and the valid-snapshot
-    # probe once more: materialize the histogram-sized frame lazily
-    # ONCE so the corpus is scanned a single time
-    hist = unpivoted.groupBy("__snap", "feature", "value").agg(
+    # probe once more
+    hist = checkpoint(unpivoted.groupBy("__snap", "feature", "value").agg(
         F.count(F.lit(1)).cast("bigint").alias("cnt")
-    ).localCheckpoint(eager=False)
+    ))
     a = hist.select(
         F.col("__snap").alias("snap_a"),
         "feature",
@@ -2676,18 +2654,10 @@ def icp_order(
     )
     if cents is None:
         cents = kmeans_centroids(base, k, iters, vec_col, id_col)
-    # the trained codebook is MODEL-sized (≤ k rows): one bounded
-    # collect → LocalRelation (the r14 semantic_dup_pairs/ivf_write
-    # pattern) instead of a lazy checkpoint whose construction plans
-    # the whole multi-round training DAG again and runs a
-    # broadcast-build job per consumer; doubles round-trip bit-exactly
-    cents = df.sparkSession.createDataFrame(cents.collect(), cents.schema)
-    # three consumers (both pair branches + the id list): materialize
-    # the assignment once or the broadcast-assign argmax re-runs per
-    # branch
-    assigned = ivf_assign(base, k, vec_col, id_col, cents=cents).localCheckpoint(
-        eager=False
-    )
+    cents, _ = collect_local(cents)
+    # three consumers (both pair branches + the id list) read the
+    # broadcast-assign argmax
+    assigned = checkpoint(ivf_assign(base, k, vec_col, id_col, cents=cents))
     if max_cell_size is not None:
         # one k-sized aggregate (bounded artifact — k rows reach the
         # driver); the count also materializes the lazy checkpoint the

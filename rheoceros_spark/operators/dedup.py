@@ -58,6 +58,7 @@ from rheoceros_spark.functions.portable import (
     tokens,
     word_ngrams,
 )
+from rheoceros_spark.operators.scale import checkpoint, collect_local, plan_barrier
 
 
 # ---------------------------------------------------------------------------
@@ -422,18 +423,10 @@ def minhash_lsh_pairs(
     # oversized-tag diamond (4 consumers) plus both verify sides — and
     # the hoped-for ReuseExchange NEVER fires (each branch prunes
     # different columns, so the canonicalized exchanges differ: the
-    # sf0.001 plan showed 8 corpus scans, 0 ReusedExchange).  One lazy
-    # localCheckpoint materializes the shingle-explode + per-doc
-    # min-hash pass ONCE; every branch then reads narrow (id, sig, sh)
-    # blocks instead of re-tokenizing and re-hashing the corpus.  At
-    # sf0.1 the redundant branches mostly overlap on idle cores
-    # (interleaved min-of-4: 2.92 s → 2.36 s); the real term is the
-    # 6× scan+hash amplification at corpus scale.  Same trade the
-    # sibling operators already accept (semantic_dup_pairs,
-    # dup_clusters): disk-backed blocks, no lineage fallback.
-    docs = _minhash_docs(df, text_col, id_col, num_hashes, ngram).localCheckpoint(
-        eager=False
-    )
+    # sf0.001 plan showed 8 corpus scans, 0 ReusedExchange), so the
+    # shingle-explode + per-doc min-hash pass is checkpointed once
+    # (interleaved min-of-4 at sf0.1: 2.92 s → 2.36 s)
+    docs = checkpoint(_minhash_docs(df, text_col, id_col, num_hashes, ngram))
     sh_df = docs.select(F.col(id_col), "sh")
     buckets = minhash_band_buckets(docs, id_col, bands, rows_per_band)
     cand = _capped_candidates(buckets, id_col, max_bucket, broadcast_oversized)
@@ -524,13 +517,8 @@ def simhash_pairs(
     """
     assert chunks > max_hamming, "chunk blocking only exact when chunks > max_hamming"
     chunk_bits = bits // chunks
-    # r14: both self-join sides consume the signature frame — without
-    # materialization the tokenize + 32-bit-sum aggregate runs TWICE.
-    # One lazy localCheckpoint of the narrow (id, simhash) rows halves
-    # the corpus-scale work (the minhash_lsh_pairs rationale); at
-    # sf0.1 it is timing-neutral (the duplicate pass overlapped on
-    # idle cores), kept for the 2× scan term at 100 TB.
-    sh = simhash_sigs(df, text_col, id_col, bits).localCheckpoint(eager=False)
+    # both self-join sides consume the narrow (id, simhash) rows
+    sh = checkpoint(simhash_sigs(df, text_col, id_col, bits))
     chunked = sh.select(
         id_col,
         "simhash",
@@ -1057,29 +1045,20 @@ def semantic_dup_pairs(
     )
     if cents is None:
         cents = kmeans_centroids(base, k, iters, vec_col, id_col)
-    # multi-round training lineage: materialize once, then assignment +
-    # both join branches read the <= k-row table.  The table is
-    # MODEL-sized (k rows), so it comes back as a LocalRelation via one
-    # bounded collect (r14, the classifier-trainer rationale): the old
-    # lazy localCheckpoint planned the whole multi-round training DAG a
-    # second time at construction (~1 s of driver latency) and ran a
-    # broadcast-build job over the checkpointed RDD per consumer.
-    # Doubles round-trip bit-exactly through collect/createDataFrame.
-    spark = df.sparkSession
-    cents = spark.createDataFrame(cents.collect(), cents.schema)
+    # assignment + both join branches read the trained codebook
+    cents, _ = collect_local(cents)
     assigned = ivf_assign(base, k, vec_col, id_col, cents=cents)
     v = F.col(vec_col)
-    e = assigned.select(
+    # both self-join branches consume the assignment (the
+    # broadcast-assign + argmax aggregate, a full corpus pass)
+    e = checkpoint(assigned.select(
         F.col("cell"),
         F.col(id_col).alias("__id"),
         v.alias("__v"),
         # scalar norm, NOT a pre-normalized vector — see
         # embedding_dup_pairs_blocked for the Catalyst-inlining measurement
         F.sqrt(dot(v, v)).alias("__n"),
-    # both self-join branches consume the assignment: materialize it
-    # once (lazy — computed on first action) or the broadcast-assign +
-    # argmax aggregate would run TWICE, one full corpus pass per branch
-    ).localCheckpoint(eager=False)
+    ))
     a = e.select(
         "cell", F.col("__id").alias("a"), F.col("__v").alias("va"), F.col("__n").alias("na")
     )
@@ -1611,14 +1590,11 @@ def winnow_pairs(
     if max_bucket < 2:
         raise ValueError(f"winnow_pairs: max_bucket must be >= 2, got {max_bucket}")
     # fps fans out to THREE consumers (the bucket-size aggregate plus
-    # both sides of the self-join) — truncate lineage so the corpus
-    # tokenize/gram-hash/window-min pass runs once, not per consumer
-    # (the winnow_match_spans / sif_embed dual-consumer discipline);
-    # the frame is 8-byte keys at ~2/(w+1) gram density, so the
-    # checkpoint is narrow (lazy: materializes on the first action)
-    fps = winnow_fingerprints(
-        df, n=n, w=w, text_col=text_col, id_col=id_col
-    ).localCheckpoint(eager=False)
+    # both sides of the self-join); the frame is 8-byte keys at
+    # ~2/(w+1) gram density, so the checkpoint is narrow
+    fps = checkpoint(
+        winnow_fingerprints(df, n=n, w=w, text_col=text_col, id_col=id_col)
+    )
     # bucket-size gate: one (fp) count aggregate over the 8-byte keys;
     # 2..max_bucket survivors re-broadcast nothing — the join below is
     # a shuffle equi-join on fp with bounded buckets
@@ -1779,19 +1755,12 @@ def winnow_match_spans(
     from rheoceros_spark.operators.scale import ensure_parallelism
 
     # THREE consumers read the candidate frame (members, the a-side
-    # join, the b-side doc filter) — without lineage truncation the
-    # whole upstream pair DAG (corpus-wide fingerprinting for
-    # winnow_pairs input) re-executes per consumer; the frame itself is
-    # match-bounded, so the checkpoint is cheap (lazy: materializes on
-    # the first action).  Ids keep the pairs frame's NATIVE type (the
+    # join, the b-side doc filter); it is match-bounded, so the
+    # checkpoint is cheap.  Ids keep the pairs frame's NATIVE type (the
     # dedup_keep_list discipline) — an eager bigint cast turned string
     # doc ids to NULL and made the alignment joins silently match
     # nothing
-    p = (
-        pairs.select("doc_a", "doc_b")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    p = checkpoint(pairs.select("doc_a", "doc_b").distinct())
     members = (
         p.select(F.col("doc_a").alias("__m"))
         .union(p.select(F.col("doc_b")))
@@ -1801,12 +1770,11 @@ def winnow_match_spans(
     grams = F.when(
         F.size(toks_f) >= n, word_ngrams(toks_f, n)
     ).otherwise(F.array().cast("array<string>"))
-    # gpos feeds BOTH join sides — checkpoint so the member-pruned
-    # tokenize/gram pass runs once (rows = member docs × grams, bounded
+    # gpos feeds BOTH join sides (rows = member docs × grams, bounded
     # by the matches).  Grams are matched by their 60-bit h64 — the
     # family's standard key (winnowing itself is hash-equality) — so
     # the alignment shuffle ships 8-byte keys, not gram text
-    gpos = (
+    gpos = checkpoint(
         ensure_parallelism(
             df.where(F.col(id_col).isNotNull())
             .join(members, F.col(id_col) == F.col("__m"), "left_semi")
@@ -1814,7 +1782,6 @@ def winnow_match_spans(
         )
         .select(F.col(id_col), F.posexplode(grams).alias("pos", "gram"))
         .select(F.col(id_col), "pos", h64(F.col("gram")).alias("gh"))
-        .localCheckpoint(eager=False)
     )
     a = p.join(gpos, p.doc_a == F.col(id_col)).select(
         "doc_a", "doc_b", F.col("pos").alias("pos_a"), "gh"
@@ -1885,8 +1852,6 @@ def intradoc_line_dedup(
     (e.g. HTML extraction), CollapseProject would otherwise inline that
     chain into EVERY reference inside the O(L²) prefix loop — measured
     as a 20× wall blowup in the markup pipeline."""
-    from rheoceros_spark.operators.scale import plan_barrier
-
     raw = F.coalesce(F.col(text_col), F.lit(""))
     # F.split's pattern is a Java REGEX while reassembly (array_join)
     # and the DuckDB twin (string_split) treat ``sep`` literally — a

@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from rheoceros_spark.operators.scale import checkpoint
+
 MEDIA_META_TYPE = T.StructType(
     [
         T.StructField("media_type", T.StringType(), False),   # image | audio | video
@@ -626,14 +628,9 @@ def _rep_banded_pairs(
     )
     grp = Window.partitionBy("__hi", "__lo")
     # three consumers branch from the grouped frame (star pairs, the
-    # banded reps, and the hot-bucket aggregate): materialize it once —
-    # upstream is typically a DECODE MapInPandas (image dhash, audio
-    # phash), and every unmaterialized consumer would replay the full
-    # decode pass over the corpus (the url_mirror_pairs lesson:
-    # measured 18.8 s vs ~2 s at sf0.1 there)
-    tagged_h = h.withColumn("__rep", F.min("__id").over(grp)).localCheckpoint(
-        eager=False
-    )
+    # banded reps, and the hot-bucket aggregate), and upstream is
+    # typically a DECODE MapInPandas (image dhash, audio phash)
+    tagged_h = checkpoint(h.withColumn("__rep", F.min("__id").over(grp)))
     # star pairs inside each exact-duplicate hash group (hamming 0)
     exact_pairs = tagged_h.where(F.col("__id") != F.col("__rep")).select(
         F.col("__rep").alias("a"),
@@ -1174,17 +1171,14 @@ def video_dedup_pairs(
         raise ValueError(
             f"video_dedup_pairs: threshold must be in (0, 1], got {threshold}"
         )
-    # checkpoint the DISTINCT decode output FIRST (r14): the ubiquitous-
+    # checkpoint the DISTINCT decode output FIRST: the ubiquitous-
     # frame aggregate and the anti-join's stream side are separate
     # consumers, and with the checkpoint only on the anti-join RESULT
     # the full demux+dHash decode pass ran TWICE (two 32-task decode
-    # stages in the profile).  The checkpointed rows are two ints per
-    # distinct frame — decode runs once, everything downstream reads
-    # blocks.
-    fh = (
+    # stages in the profile)
+    fh = checkpoint(
         frame_hashes.select(F.col(id_col).alias("__id"), "dhash_hi", "dhash_lo")
         .distinct()
-        .localCheckpoint(eager=False)
     )
     if max_videos is not None:
         wide = (
@@ -1194,7 +1188,7 @@ def video_dedup_pairs(
             .select("dhash_hi", "dhash_lo")
         )
         fh = fh.join(F.broadcast(wide), ["dhash_hi", "dhash_lo"], "left_anti")
-    fh = fh.localCheckpoint(eager=False)  # sets + verify legs reuse it
+    fh = checkpoint(fh)  # sets + verify legs reuse it
     sets = fh.groupBy("__id").agg(
         F.count(F.lit(1)).cast("bigint").alias("__n"),
         F.concat_ws(
@@ -1216,9 +1210,9 @@ def video_dedup_pairs(
         F.col("__n").alias("n_shared"),
         F.lit(1.0).alias("jaccard_r"),
     )
-    reps = tagged.where(F.col("__id") == F.col("__rep")).select(
+    reps = checkpoint(tagged.where(F.col("__id") == F.col("__rep")).select(
         F.col("__rep").alias("__r"), F.col("__n")
-    ).localCheckpoint(eager=False)
+    ))
     rframes = fh.join(
         reps.select(F.col("__r").alias("__id")), "__id", "left_semi"
     )
@@ -1424,13 +1418,8 @@ def dedup_videos_against_index(
             f"{threshold}"
         )
     # checkpoint the distinct index rows FIRST so the ubiquitous-frame
-    # aggregate and the anti-join read one materialization instead of
-    # scanning the index twice (the video_dedup_pairs r14 note)
-    ifh = (
-        index.select("doc_id", "dhash_hi", "dhash_lo")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    # aggregate and the anti-join do not scan the index twice
+    ifh = checkpoint(index.select("doc_id", "dhash_hi", "dhash_lo").distinct())
     if max_videos is not None:
         wide = (
             ifh.groupBy("dhash_hi", "dhash_lo")
@@ -1441,7 +1430,7 @@ def dedup_videos_against_index(
         ifh = ifh.join(F.broadcast(wide), ["dhash_hi", "dhash_lo"], "left_anti")
     else:
         wide = None
-    ifh = ifh.localCheckpoint(eager=False)
+    ifh = checkpoint(ifh)
     isz = ifh.groupBy(F.col("doc_id").alias("__iid")).agg(
         F.count(F.lit(1)).cast("bigint").alias("__in")
     )
@@ -1450,7 +1439,7 @@ def dedup_videos_against_index(
     ).select(F.col(id_col).alias("__nid"), "dhash_hi", "dhash_lo").distinct()
     if wide is not None:
         nfh = nfh.join(F.broadcast(wide), ["dhash_hi", "dhash_lo"], "left_anti")
-    nfh = nfh.localCheckpoint(eager=False)
+    nfh = checkpoint(nfh)
     # identical new sets probe once through their min-id representative
     sets = nfh.groupBy("__nid").agg(
         F.count(F.lit(1)).cast("bigint").alias("__nn"),
@@ -1464,9 +1453,7 @@ def dedup_videos_against_index(
         ).alias("__setkey"),
     )
     grp = Window.partitionBy("__setkey")
-    tagged = sets.withColumn("__rep", F.min("__nid").over(grp)).localCheckpoint(
-        eager=False
-    )
+    tagged = checkpoint(sets.withColumn("__rep", F.min("__nid").over(grp)))
     reps = tagged.where(F.col("__nid") == F.col("__rep")).select(
         F.col("__rep").alias("__r"), F.col("__nn")
     )

@@ -1,18 +1,47 @@
-"""Scale utilities: bucketed co-located joins and skew salting.
+"""Scale utilities: materialization, bucketed co-located joins and
+skew salting.
 
-These are the knobs the 100 TB deployment turns that small-SF
-correctness tests never force:
+**Materialization.**  This module is the only place that decides how
+an intermediate frame is materialized; operators call one of these
+four and never ``localCheckpoint``/``observe``/``collect`` for that
+themselves:
 
-* **Bucketing** — persist both sides of a recurring join bucketed by
-  the join key (``bucketBy`` + ``sortBy`` + ``saveAsTable``); Spark
-  then sort-merge-joins bucket-to-bucket with **no exchange on either
-  side**.  The reference ships shuffle-heavy tuning presets instead
-  (``utils/spark.py:80-126``) because it cannot control user storage;
-  owning the managed dataset layer means we can.
-* **Salting** — explode a hot key into ``salt_n`` subkeys so one
-  reducer does not own the whole key.  AQE's skew-join handles skewed
-  *joins* automatically (enabled in the session defaults); salting
-  covers skewed *aggregations* and pre-AQE shuffles.
+* :func:`checkpoint` — lazy local checkpoint, for a frame that two or
+  more consumers read (both self-join sides, an aggregate plus a
+  join, loop state carried across rounds).  Without it every consumer
+  re-runs the upstream plan — a corpus scan, tokenize or decode per
+  branch.  "Lazy" is not free under AQE: building the checkpointed RDD
+  executes the adaptive plan, which runs every upstream shuffle stage
+  while the DataFrame is being constructed; only the final stage waits
+  for the first action, which computes and keeps its blocks.  The
+  blocks are executor-local (no lineage fallback), so the kind fits
+  intermediates of one job, not artifacts.
+* :func:`observed_checkpoint` — eager local checkpoint that also
+  computes scalar aggregates in the same pass, for loop rounds that
+  test convergence or emptiness on the frame they just built: one job
+  instead of a checkpoint plus a separate ``agg().collect()`` that
+  re-reads the frame.
+* :func:`collect_local` — bounded collect back into a LocalRelation,
+  for MODEL-sized frames (a ≤ k-row codebook) whose lineage is a
+  multi-round training DAG.  A lazy checkpoint would plan that DAG
+  again while it is constructed and run a broadcast-build job over the
+  checkpointed RDD per consumer; the LocalRelation is planned once and
+  broadcasts from the driver.  Doubles round-trip bit-exactly.
+* :func:`plan_barrier` — a zero-cost ``observe()`` node that stops
+  Catalyst from inlining an expensive computed-column chain into
+  every downstream reference; it materializes nothing.
+
+**Bucketing** — persist both sides of a recurring join bucketed by the
+join key (``bucketBy`` + ``sortBy`` + ``saveAsTable``); Spark then
+sort-merge-joins bucket-to-bucket with **no exchange on either side**.
+The reference ships shuffle-heavy tuning presets instead
+(``utils/spark.py:80-126``) because it cannot control user storage;
+owning the managed dataset layer means we can.
+
+**Salting** — explode a hot key into ``salt_n`` subkeys so one reducer
+does not own the whole key.  AQE's skew-join handles skewed *joins*
+automatically (enabled in the session defaults); salting covers skewed
+*aggregations* and pre-AQE shuffles.
 """
 
 from __future__ import annotations
@@ -23,56 +52,55 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_PLAN_BARRIER_SEQ = itertools.count(1)
+#: observation names must be unique within one query — one counter
+#: keeps every barrier and observed checkpoint distinct
+_OBSERVATION_SEQ = itertools.count(1)
+
+
+def checkpoint(df: DataFrame) -> DataFrame:
+    """Lazy local checkpoint of ``df`` (see the module docstring)."""
+    return df.localCheckpoint(eager=False)
+
+
+def observed_checkpoint(df: DataFrame, *metrics: Column) -> tuple[DataFrame, tuple]:
+    """Eager local checkpoint of ``df`` that computes the scalar
+    aggregates ``metrics`` over it in the same pass (``observe()``
+    accumulators); returns ``(checkpointed_df, metric_values)``.
+
+    Only algebraic, addition-order-free aggregates belong here (the
+    convergence hash-sums are decimal sums of xxhash64 — exact).
+    CollectMetrics counts successful tasks only; the callers compare
+    round-over-round equality, where a spurious mismatch merely runs
+    one extra (idempotent) round."""
+    name = f"__ckpt_metrics_{next(_OBSERVATION_SEQ)}"
+    obs = df.observe(name, *metrics)
+    ck = obs.localCheckpoint(eager=True)
+    row = obs._jdf.queryExecution().observedMetrics().apply(name)
+    return ck, tuple(row.get(i) for i in range(len(metrics)))
+
+
+def collect_local(df: DataFrame) -> tuple[DataFrame, int]:
+    """Collect the small frame ``df`` to the driver and return it as a
+    LocalRelation, with its row count (see the module docstring)."""
+    rows = df.collect()
+    return df.sparkSession.createDataFrame(rows, df.schema), len(rows)
 
 
 def plan_barrier(df: DataFrame, label: str) -> DataFrame:
     """An optimizer barrier that costs nothing at runtime: an
     ``observe()`` (CollectMetrics) node counting input rows.  Neither
     ``CollapseProject`` nor ``PushPredicateThroughNonJoin`` crosses it,
-    which stops Catalyst from inlining a deep computed-column chain
-    into every downstream reference — neither rule has a cost guard,
-    and an expensive expression referenced N times re-executes N times
-    once inlined (the ``urls._barriered`` finding, measured 14 MB of
-    optimized plan there and a 20× wall blowup when an extraction
-    chain was inlined into a per-line HOF loop here).  Use it between
-    an expensive per-row stage and a consumer that references its
-    output repeatedly."""
+    and dynamic partition pruning's alias walk stops at it.  None of
+    them has a cost guard, and an expensive expression referenced N
+    times re-executes N times once inlined (measured 14 MB of optimized
+    plan for the URL canonicalization chain and a 20× wall blowup when
+    an extraction chain was inlined into a per-line HOF loop).  Use it
+    between an expensive per-row stage and a consumer that references
+    its output repeatedly.  Filters cannot be pushed below it either,
+    so apply scan-selective filters before it."""
     return df.observe(
-        f"{label}_{next(_PLAN_BARRIER_SEQ)}", F.count(F.lit(1)).alias("rows_in")
+        f"{label}_{next(_OBSERVATION_SEQ)}", F.count(F.lit(1)).alias("rows_in")
     )
-
-
-_CKPT_METRIC_SEQ = itertools.count(1)
-
-
-def checkpoint_with_metrics(df: DataFrame, *metrics: Column):
-    """Materialize ``df`` as a local checkpoint and compute scalar
-    aggregates over it IN THE SAME PASS, via ``observe()``
-    (CollectMetrics accumulators) — returns ``(checkpointed_df,
-    metric_values_tuple)``.
-
-    The iterative operators (connected-components label propagation,
-    star contraction) previously paid per round: a lazy
-    ``localCheckpoint`` whose construction already runs every non-final
-    query stage under AQE, THEN a separate convergence
-    ``agg(...).collect()`` that re-reads the whole checkpointed frame.
-    Fusing the aggregate into the materializing pass removes one full
-    read of the (corpus-sized at 100 TB) frame per round plus one
-    driver job and one planning pass (guide §5 driver discipline;
-    measured: lazy-ckpt+collect 3 jobs / eager-ckpt+observe 2 jobs,
-    observed value identical to the separate aggregate).
-
-    Only algebraic, addition-order-free aggregates belong here (the
-    convergence hash-sums are decimal sums of xxhash64 — exact);
-    CollectMetrics counts successful tasks only, and the consumers
-    compare round-over-round equality where a spurious mismatch merely
-    runs one extra (idempotent) round."""
-    name = f"__ckpt_metrics_{next(_CKPT_METRIC_SEQ)}"
-    obs = df.observe(name, *metrics)
-    ck = obs.localCheckpoint(eager=True)
-    row = obs._jdf.queryExecution().observedMetrics().apply(name)
-    return ck, tuple(row.get(i) for i in range(len(metrics)))
 
 
 def ensure_parallelism(df: DataFrame, min_partitions: Optional[int] = None) -> DataFrame:
@@ -311,14 +339,11 @@ def skew_report(
         raise ValueError(f"skew_report: top must be >= 1, got {top}")
     from pyspark.sql import Window
 
-    counts = (
+    # two consumers: the totals scalar agg and the TakeOrdered head
+    counts = checkpoint(
         df.select(F.col(key_col).cast("string").alias("key"))
         .groupBy("key")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-        # both consumers (totals scalar agg + TakeOrdered head) read the
-        # keys-sized counts frame: materialize it lazily ONCE or each
-        # branch re-runs the corpus scan + count shuffle
-        .localCheckpoint(eager=False)
     )
     totals = counts.agg(
         F.sum("cnt").cast("bigint").alias("n_rows"),

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from rheoceros_spark.functions.portable import cosine, dot, h64
+from rheoceros_spark.operators.scale import checkpoint, collect_local
 
 
 def plane_matrix(nbits: int, dim: int) -> list[list[float]]:
@@ -559,9 +560,9 @@ def mmr_rerank(
         raise ValueError(f"mmr_rerank: k must be >= 1, got {k}")
     if not 0 <= lam_q <= 1000:
         raise ValueError(f"mmr_rerank: lam_q must be in [0, 1000], got {lam_q}")
-    base = cands.select(
-        F.col(query_col), F.col(id_col), F.col(rel_col), F.col(vec_col)
-    ).localCheckpoint(eager=False)
+    base = checkpoint(
+        cands.select(F.col(query_col), F.col(id_col), F.col(rel_col), F.col(vec_col))
+    )
     a = base.select(
         F.col(query_col),
         F.col(id_col).alias("__a"),
@@ -881,16 +882,8 @@ def ivf_write(
     else:
         # the manifest must record the CODEBOOK's actual size, not the
         # default parameter — a trained codebook of a different k would
-        # otherwise persist a lying n_centroids.  The codebook is
-        # MODEL-sized (≤ k rows), so one bounded collect materializes
-        # the training lineage once and every consumer reads a
-        # LocalRelation (r14 — replaces the lazy checkpoint whose toRdd
-        # planned the multi-round training DAG again at construction);
-        # doubles round-trip bit-exactly
-        spark = df.sparkSession
-        rows = cents.collect()
-        cents = spark.createDataFrame(rows, cents.schema)
-        n_centroids = len(rows)
+        # otherwise persist a lying n_centroids
+        cents, n_centroids = collect_local(cents)
     assigned = ivf_assign(df, n_centroids, vec_col, id_col, cents=cents)
     (
         assigned.repartition("cell")
@@ -1391,9 +1384,8 @@ def kmeans_centroids(
     for _ in range(iters):
         cents = _kmeans_update(base, k, vec_col, id_col, cents)
         if iters > 3:
-            # truncate the per-round lineage the way dup_clusters does;
-            # the centroid table is ≤ k rows so this is driver-cheap
-            cents = cents.localCheckpoint(eager=False)
+            # truncate the per-round lineage of the ≤ k-row table
+            cents = checkpoint(cents)
     return cents
 
 
@@ -1490,16 +1482,9 @@ def ivfpq_write(
     base = df.where(F.col(id_col).isNotNull()).select(id_col, vec_col)
     if cents is None:
         cents = kmeans_centroids(base, n_cells, iters, vec_col, id_col)
-    # the trained-codebook plan is multiple corpus scans — materialize
-    # once; every consumer below (count, assign, residuals, manifest)
-    # then reads the ≤k-row LocalRelation, not the training lineage
-    # (r14: one bounded collect instead of the lazy checkpoint, whose
-    # toRdd planned the training DAG again at construction; doubles
-    # round-trip bit-exactly)
-    spark = df.sparkSession
-    cent_rows = cents.collect()
-    cents = spark.createDataFrame(cent_rows, cents.schema)
-    n_cells = len(cent_rows)
+    # every consumer below (count, assign, residuals, manifest) reads
+    # the trained codebook
+    cents, n_cells = collect_local(cents)
     assigned = ivf_assign(base, n_cells, vec_col, id_col, cents=cents)
     resid = assigned.join(
         F.broadcast(cents), assigned["cell"] == cents["cid"]

@@ -17,6 +17,7 @@ from rheoceros_spark.functions.portable import (
     normalize_text,
     tokens,
 )
+from rheoceros_spark.operators.scale import checkpoint
 
 # BPE-ish pre-tokenizer: letter runs, single digits, punctuation marks
 # (ASCII classes only — identical semantics in Java and RE2/PCRE).
@@ -731,13 +732,9 @@ def bigram_nll(
         .where((F.col("v") != "") & (F.col("w") != ""))
     )
     # two consumers branch here (the corpus bigram model and the per-doc
-    # scoring join) — without materialization the pair explode + the
-    # (id, v, w) aggregate run TWICE (r14, the minhash_lsh_pairs
-    # rationale; interleaved A/B at sf0.1: 3.08 s → 2.64 s min-of-4)
-    per_doc_bg = (
-        pairs.groupBy(id_col, "v", "w")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=False)
+    # scoring join; interleaved A/B at sf0.1: 3.08 s → 2.64 s min-of-4)
+    per_doc_bg = checkpoint(
+        pairs.groupBy(id_col, "v", "w").agg(F.count(F.lit(1)).alias("n"))
     )
     if bigram_counts is None:
         bigram_counts = per_doc_bg.groupBy("v", "w").agg(F.sum("n").alias("cnt"))
@@ -938,11 +935,10 @@ def bm25_topk(
 
     ``materialize_matched`` controls whether the matched (doc, term)
     aggregate — consumed twice: document frequencies + the weight
-    frame — is re-executed (None, the default), Spark-cached
-    ("cache"), or lineage-truncated ("localCheckpoint").  The default
-    is None because a "cache" caller owns the cleanup: the cached
-    frame lives until the session ends or the caller clears it
-    (Spark's CacheManager holds the reference past GC), so a
+    frame — is re-executed (None, the default) or Spark-cached
+    ("cache").  The default is None because a "cache" caller owns the
+    cleanup: the cached frame lives until the session ends or the
+    caller clears it (Spark's CacheManager holds the reference past GC), so a
     long-lived service embedding many distinct bm25 calls would leak
     one cached frame per call.  Single-query batch entry points (the
     registered bench queries) opt in with "cache";
@@ -1058,12 +1054,10 @@ def bm25_topk(
     )
     if materialize_matched == "cache":
         matched = matched.cache()
-    elif materialize_matched == "localCheckpoint":
-        matched = matched.localCheckpoint(eager=False)
     elif materialize_matched is not None:
         raise ValueError(
-            "bm25_topk: materialize_matched must be None, 'cache' or "
-            f"'localCheckpoint', got {materialize_matched!r}"
+            "bm25_topk: materialize_matched must be None or 'cache', "
+            f"got {materialize_matched!r}"
         )
     doc_freq = matched.groupBy("token").agg(
         F.count(F.lit(1)).cast("double").alias("__df")
@@ -1642,12 +1636,15 @@ def _bpe_apply_pair_sql(sym_expr: str, p1: str, p2: str) -> str:
     )
 
 
+#: merge rounds between re-checkpoints of the bpe_train symbol state
+_BPE_CHECKPOINT_EVERY = 8
+
+
 def bpe_train(
     df: DataFrame,
     n_merges: int,
     text_col: str = "text",
     id_col: str = "doc_id",
-    checkpoint_every: int = 8,
 ) -> list[tuple[str, str]]:
     """Train a BPE merge table on the corpus — the TRAINING half of the
     tokenizer story (:func:`bpe_encode` applies a table; this learns
@@ -1665,7 +1662,8 @@ def bpe_train(
     collect (``cnt DESC, a, b`` — integer counts + lexicographic
     tie-break, so every engine picks the same pair), and one codegen'd
     fold applying the merge; the symbol state re-checkpoints every
-    ``checkpoint_every`` rounds so the plan never grows unboundedly.
+    8 rounds (``_BPE_CHECKPOINT_EVERY``) so the plan never grows
+    unboundedly.
     Driver state is one (a, b) pair per round — scalars, never data.
 
     The pre-tokenizer isolates punctuation into single-character
@@ -1691,7 +1689,7 @@ def bpe_train(
         F.col(text_col).isNull() | (F.length(norm) == 0),
         F.array().cast("array<string>"),
     ).otherwise(F.regexp_extract_all(norm, F.lit(BPE_REGEX), F.lit(0)))
-    wc = (
+    wc = checkpoint(
         df.where(F.col(id_col).isNotNull())
         .select(F.explode(words).alias("__w"))
         .groupBy("__w")
@@ -1700,9 +1698,6 @@ def bpe_train(
             F.expr("filter(split(__w, ''), x -> x <> '')").alias("__syms"),
             F.col("__cnt"),
         )
-        # lazy (r14): the first merge round's top-pair collect is the
-        # materializing action — no dedicated checkpoint job
-        .localCheckpoint(eager=False)
     )
     merges: list[tuple[str, str]] = []
     for r in range(n_merges):
@@ -1737,8 +1732,8 @@ def bpe_train(
         a, b = top[0].a, top[0].b
         merges.append((a, b))
         wc = wc.withColumn("__syms", F.expr(_bpe_apply_pair_sql("__syms", a, b)))
-        if (r + 1) % checkpoint_every == 0:
-            wc = wc.localCheckpoint(eager=False)
+        if (r + 1) % _BPE_CHECKPOINT_EVERY == 0:
+            wc = checkpoint(wc)
     return merges
 
 
@@ -2263,9 +2258,7 @@ def logreg_train(
         )
     df = _train_sample_gate(df, id_col, train_frac, sample_seed)
     spark = df.sparkSession
-    feats = hashed_token_features(df, text_col, id_col, n_buckets, seed).localCheckpoint(
-        eager=False
-    )
+    feats = checkpoint(hashed_token_features(df, text_col, id_col, n_buckets, seed))
     labels = df.where(F.col(id_col).isNotNull()).select(
         F.col(id_col), F.col(label_col).cast("bigint").alias("__y")
     )
@@ -2474,9 +2467,9 @@ def lang_classifier_train(
         )
     if not classes:
         raise ValueError("lang_classifier_train: empty class set")
-    feats = hashed_token_features_norm(
-        base, text_col, id_col, n_buckets, seed, ngram_range
-    ).localCheckpoint(eager=False)
+    feats = checkpoint(
+        hashed_token_features_norm(base, text_col, id_col, n_buckets, seed, ngram_range)
+    )
     labels = base.select(F.col(id_col), F.col(label_col).alias("__label"))
     n = labels.count()  # one scalar action, like logreg_train's
     if n == 0:
@@ -3145,17 +3138,13 @@ def sif_embed(
     base = df.where(F.col(id_col).isNotNull())
     # pass 1: token counts (fan the scan out before the tokenize CPU —
     # the bm25 lesson) → top-V head + exact total
-    cnts = (
+    # two driver actions consume this vocab-sized frame (the exact
+    # total and the top-V head; ~1 s per extra corpus pass at sf0.1)
+    cnts = checkpoint(
         ensure_parallelism(base.select(toks_f.alias("__toks")))
         .select(F.explode(F.col("__toks")).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        # two driver actions consume this frame (the exact total and
-        # the top-V head) — truncate lineage so the corpus tokenizes
-        # ONCE, not once per action (measured ~1 s per extra pass at
-        # sf0.1); the checkpointed frame is vocab-sized.  Lazy (r14):
-        # the total-count agg right below materializes it
-        .localCheckpoint(eager=False)
     )
     total = cnts.agg(F.sum("cnt")).head()[0] or 0
     head = (

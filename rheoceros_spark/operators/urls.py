@@ -48,6 +48,8 @@ from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from rheoceros_spark.operators.scale import checkpoint, plan_barrier
+
 #: explicit tracker/click-id params stripped by canonicalization, on
 #: top of the ``utm_`` prefix rule.  The usual cross-site suspects
 #: (Google/Facebook/Microsoft click ids, mail-campaign ids); extend
@@ -108,21 +110,6 @@ def _pct_upper_sql(parts_expr: str, *, duck: bool) -> str:
         joined = f"array_join({fix}, '')"
         size = f"size({parts_expr})"
     return f"(CASE WHEN {size} <= 1 THEN {first} ELSE {first} || {joined} END)"
-
-
-#: observation names must be unique within one query — a module
-#: counter keeps repeated operator applications distinct
-_BARRIER_SEQ = iter(range(1, 1 << 31))
-
-
-def _barriered(df: DataFrame, label: str) -> DataFrame:
-    """A predicate-pushdown barrier that costs nothing at runtime: an
-    ``observe()`` (CollectMetrics) node counting input rows.  Filters
-    cannot be pushed below it, which stops
-    ``PushPredicateThroughNonJoin`` from inlining a deep computed-
-    column chain into the predicate (no cost guard in that rule — see
-    :func:`domain_filter`)."""
-    return df.observe(f"{label}_{next(_BARRIER_SEQ)}", F.count(F.lit(1)).alias("rows_in"))
 
 
 def url_canonicalize(
@@ -442,10 +429,10 @@ def dedup_exact_url(
     output keeps the input schema plus ``canonical_url``.
     """
     keyed_df = url_canonicalize(df, url_col=url_col, out_col="canonical_url", trackers=trackers)
-    # pushdown barrier (see _barriered): the IS [NOT] NULL filters and
+    # pushdown barrier: the IS [NOT] NULL filters and
     # the md5 key below would otherwise have the full canonicalization
     # chain inlined into them (measured 410 KB of optimized plan)
-    keyed_df = _barriered(keyed_df, "dedup_exact_url_rows_in")
+    keyed_df = plan_barrier(keyed_df, "dedup_exact_url_rows_in")
     key = F.md5(F.col("canonical_url")).alias("__key")
     if score_col is None:
         nsc = F.lit(0.0).alias("__nsc")
@@ -510,14 +497,12 @@ def domain_filter(
     # predicate inlines the whole chain multiplicatively (measured:
     # a 14 MB optimized plan and a 76 s optimizer pass on a 2-row
     # frame; a non-deterministic pin does NOT help — the rule pushes
-    # through a deterministic Project regardless).  An observe() node
-    # (CollectMetrics) is a semantic no-op predicates cannot cross, and
-    # the row count it collects is genuinely useful telemetry.  Nothing
+    # through a deterministic Project regardless).  Nothing
     # is lost: every op below the barrier is per-row, so there is no
     # scan-level pruning for this predicate to reach.  Composition
     # note: apply scan-selective filters BEFORE domain_filter — a
     # later WHERE cannot push below the barrier either.
-    d = _barriered(d, "domain_filter_rows_in")
+    d = plan_barrier(d, "domain_filter_rows_in")
     if isinstance(blocked, DataFrame):
         rules = blocked.select(F.lower(F.col("domain")).alias("__rule")).distinct()
         exploded = d.select(id_col, F.explode("__dsuf").alias("__s"))
@@ -567,7 +552,7 @@ def url_index_write(
     ``path=None`` for the unpersisted index plan.
     """
     keyed = url_canonicalize(df, url_col=url_col, out_col="__canon", trackers=trackers)
-    keyed = _barriered(keyed, "url_index_rows_in")
+    keyed = plan_barrier(keyed, "url_index_rows_in")
     idx = (
         keyed.where(F.col("__canon").isNotNull())
         .select(F.md5(F.col("__canon")).alias("fp"))
@@ -669,7 +654,7 @@ def url_mirror_pairs(
     from rheoceros_spark.operators.scale import ensure_parallelism
 
     canon = url_canonicalize(df, url_col=url_col, out_col="__curl", trackers=trackers)
-    canon = _barriered(canon, "url_mirror_pairs_rows_in")
+    canon = plan_barrier(canon, "url_mirror_pairs_rows_in")
     parts = url_domain(
         canon.where(F.col("__curl").isNotNull()).select("__curl"),
         url_col="__curl",
@@ -681,15 +666,13 @@ def url_mirror_pairs(
             "__path"
         ),
     )
-    paths = (
+    # three consumers (signatures + both verify legs), each of which
+    # would replay the full URL canonicalization chain over the corpus
+    # (measured 18.8 s vs ~2 s for the verify stage at sf0.1)
+    paths = checkpoint(
         ensure_parallelism(parts.where(F.col("domain").isNotNull()))
         .select("domain", h64(F.col("__path")).alias("ph"))
         .distinct()
-        # three consumers (signatures + both verify legs): materialize
-        # once — every re-evaluation would replay the full URL
-        # canonicalization chain over the corpus (measured 18.8 s vs
-        # ~2 s for the verify stage at sf0.1)
-        .localCheckpoint(eager=False)
     )
     if max_hosts is not None:
         wide = paths.groupBy("ph").agg(
@@ -706,17 +689,19 @@ def url_mirror_pairs(
         )
         for i in range(num_hashes)
     ]
-    sigs = paths.groupBy("domain").agg(
+    sigs = checkpoint(paths.groupBy("domain").agg(
         *mins, F.count(F.lit(1)).cast("bigint").alias("n_paths")
     ).select(
         "domain",
         F.array(*[F.col(f"__m{i}") for i in range(num_hashes)]).alias("sig"),
         "n_paths",
-    ).localCheckpoint(eager=False)
+    ))
     buckets = minhash_band_buckets(
         sigs, id_col="domain", bands=bands, rows_per_band=rows_per_band
     )
-    cands = (
+    # consumed by the domain restriction (twice) and the final join;
+    # candidate pairs are host-count-sized
+    cands = checkpoint(
         buckets.alias("x")
         .join(buckets.alias("y"), ["band", "bucket"])
         .where(F.col("x.domain") < F.col("y.domain"))
@@ -724,9 +709,6 @@ def url_mirror_pairs(
             F.col("x.domain").alias("domain_a"), F.col("y.domain").alias("domain_b")
         )
         .distinct()
-        # consumed by the domain restriction (twice) and the final
-        # join — candidate pairs are host-count-sized, checkpoint them
-        .localCheckpoint(eager=False)
     )
     cand_domains = cands.select(F.col("domain_a").alias("domain")).union(
         cands.select("domain_b")
@@ -808,7 +790,7 @@ def robots_gate(
             f"robots_gate: rules must carry columns {sorted(need)}, got "
             f"{rules.columns}"
         )
-    rarr = (
+    rarr = checkpoint(
         rules.where(F.col("domain").isNotNull() & F.col("path_prefix").isNotNull())
         .select(
             "domain",
@@ -822,7 +804,6 @@ def robots_gate(
         )
         .groupBy("domain")
         .agg(F.collect_list("__rule").alias("__rules"))
-        .localCheckpoint(eager=False)
     )
     if max_rules_per_domain is not None:
         # one rules-sized aggregate; the collect is a single scalar
@@ -839,7 +820,7 @@ def robots_gate(
                 "max_rules_per_domain=None to accept the cost knowingly)"
             )
     canon = url_canonicalize(df, url_col=url_col, out_col="__curl", trackers=trackers)
-    canon = _barriered(canon, "robots_gate_rows_in")
+    canon = plan_barrier(canon, "robots_gate_rows_in")
     with_dom = url_domain(canon, url_col="__curl", out_col="domain", strip_www=True)
     path_raw = F.regexp_extract(F.col("__curl"), "^[a-z0-9+.-]+://[^/]*(/.*)$", 1)
     with_path = with_dom.withColumn(
@@ -853,7 +834,7 @@ def robots_gate(
     # — measured 4.3 s of PartitionPruning time PER CALL (flat, data-
     # independent) at sf0.001, 0.2 s with the barrier.  CollectMetrics
     # stops the walk; the join itself is unchanged.
-    with_path = _barriered(with_path, "robots_gate_join_in")
+    with_path = plan_barrier(with_path, "robots_gate_join_in")
     joined = with_path.join(F.broadcast(rarr), "domain", "left")
     matches = F.filter(
         F.col("__rules"),

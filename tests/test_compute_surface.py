@@ -160,3 +160,19 @@ def test_pending_node_created_hook(spark, events_by_day, tmp_path):
     )
     app.process(events["2024-01-02"])
     assert created == ["joined"]
+
+
+def test_execution_clears_its_job_group(spark, events_by_day, tmp_path):
+    # the next execution's first job (its input schema read) must not
+    # carry this execution's "rheoceros <node> {dims}" label
+    app = Application("label_app", str(tmp_path / "store"), spark)
+    events = _events_signal(app, events_by_day)
+    node = app.create_data(
+        id="labelled",
+        inputs=[events["2024-01-01":"2024-01-03"]],
+        compute_targets=SparkSQL("SELECT count(*) AS n FROM events"),
+    )
+    app.execute(node["2024-01-02"])
+    sc = spark.sparkContext
+    for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+        assert sc.getLocalProperty(prop) is None, prop

@@ -1,10 +1,16 @@
-"""Bucketed co-located joins (no exchange) and skew salting."""
+"""Materialization, bucketed co-located joins (no exchange) and skew
+salting."""
+
+import pathlib
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
+import rheoceros_spark
 from rheoceros_spark.operators.scale import (
     bucketed_join,
+    observed_checkpoint,
     salted_aggregate,
     salted_join,
     write_bucketed,
@@ -308,3 +314,40 @@ class TestRuntimeFilters:
             except Exception:
                 now = None
             assert now == v
+
+
+def test_observed_checkpoint_one_job_and_exact_metrics(spark):
+    sc = spark.sparkContext
+    df = spark.range(0, 1000, 1, 4).select((F.col("id") % 7).alias("k"))
+    metrics = (
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.xxhash64("k").cast("decimal(38,0)")).alias("s"),
+    )
+    expected = tuple(df.agg(*metrics).collect()[0])
+    sc.setJobGroup("observed_checkpoint_test", "observed_checkpoint_test")
+    try:
+        ck, values = observed_checkpoint(df, *metrics)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events are async
+        jobs = sc.statusTracker().getJobIdsForGroup("observed_checkpoint_test")
+    finally:
+        sc._jsc.clearJobGroup()
+    assert values == expected
+    # the checkpoint and its metrics come from ONE pass over the frame
+    assert len(jobs) == 1, jobs
+    assert ck.count() == 1000
+
+
+def test_materialization_lives_only_in_scale():
+    """Operators materialize through operators/scale.py only; the one
+    other observe() is sources/io.py's write-time record count."""
+    root = pathlib.Path(rheoceros_spark.__file__).parent
+    pattern = re.compile(r"localCheckpoint\(|observedMetrics|\.observe\(")
+    hits = [
+        f"{rel}:{n}: {line.strip()}"
+        for path in sorted(root.rglob("*.py"))
+        if (rel := path.relative_to(root).as_posix()) != "operators/scale.py"
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        for m in pattern.finditer(line)
+        if (rel, m.group()) != ("sources/io.py", ".observe(")
+    ]
+    assert not hits, "\n".join(hits)
