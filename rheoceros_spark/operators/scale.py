@@ -4,7 +4,8 @@ skew salting.
 **Materialization.**  This module is the only place that decides how
 an intermediate frame is materialized; operators call one of these
 four and never ``localCheckpoint``/``observe``/``collect`` for that
-themselves:
+themselves (:func:`local_frame` builds the driver-held tables they
+read):
 
 * :func:`checkpoint` — lazy local checkpoint, for a frame that two or
   more consumers read (both self-join sides, an aggregate plus a
@@ -21,12 +22,14 @@ themselves:
   test convergence or emptiness on the frame they just built: one job
   instead of a checkpoint plus a separate ``agg().collect()`` that
   re-reads the frame.
-* :func:`collect_local` — bounded collect back into a LocalRelation,
-  for MODEL-sized frames (a ≤ k-row codebook) whose lineage is a
-  multi-round training DAG.  A lazy checkpoint would plan that DAG
-  again while it is constructed and run a broadcast-build job over the
-  checkpointed RDD per consumer; the LocalRelation is planned once and
-  broadcasts from the driver.  Doubles round-trip bit-exactly.
+* :func:`collect_local` — bounded collect back into a LocalRelation
+  (through :func:`local_frame`), for MODEL-sized frames (a ≤ k-row
+  codebook) whose lineage is a multi-round training DAG.  A lazy
+  checkpoint would plan that DAG again while it is constructed and run
+  a broadcast-build job over the checkpointed RDD per consumer; the
+  LocalRelation is planned once, collecting it runs no Spark job, and
+  a broadcast of it ships the driver's rows without re-running the
+  DAG.  Doubles round-trip bit-exactly.
 * :func:`plan_barrier` — a zero-cost ``observe()`` node that stops
   Catalyst from inlining an expensive computed-column chain into
   every downstream reference; it materializes nothing.
@@ -47,10 +50,11 @@ automatically (enabled in the session defaults); salting covers skewed
 from __future__ import annotations
 
 import itertools
-from typing import Optional, Sequence
+from typing import Optional, Sequence, Union
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, StructType
 
 #: observation names must be unique within one query — one counter
 #: keeps every barrier and observed checkpoint distinct
@@ -83,7 +87,35 @@ def collect_local(df: DataFrame) -> tuple[DataFrame, int]:
     """Collect the small frame ``df`` to the driver and return it as a
     LocalRelation, with its row count (see the module docstring)."""
     rows = df.collect()
-    return df.sparkSession.createDataFrame(rows, df.schema), len(rows)
+    return local_frame(df.sparkSession, rows, df.schema), len(rows)
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence[tuple], schema: Union[StructType, str]
+) -> DataFrame:
+    """A driver-held table (``rows`` as tuples in ``schema`` order;
+    ``schema`` a StructType or DDL string) as a LocalRelation.
+
+    ``spark.createDataFrame(rows, schema)`` parallelizes a Python list
+    into a ``LogicalRDD``, so every collect of such a table runs a
+    Spark job and every query over it plans an RDD scan.  An Arrow
+    table lands as a LocalRelation instead: a collect, or a scalar
+    subquery over it, reads the rows on the driver and runs no job (a
+    broadcast of it still runs one small job that ships those rows).
+    Values round-trip exactly — doubles bit-for-bit, BIGINTs, arrays,
+    structs and NULLs.  For tables written once and never read back by
+    a query the Python-RDD path is just as good."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.table(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def plan_barrier(df: DataFrame, label: str) -> DataFrame:

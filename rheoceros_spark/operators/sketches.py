@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from rheoceros_spark.functions.portable import h64, h64_sql
+from rheoceros_spark.operators.scale import local_frame
 
 __all__ = [
     "kmv_distinct",
@@ -138,7 +139,7 @@ def histogram_quantiles(
     cum = hist.withColumn("cum", F.sum("cnt").over(w)).withColumn(
         "n", F.sum("cnt").over(Window.partitionBy())
     )
-    qdf = df.sparkSession.createDataFrame([(float(q),) for q in quantiles], "q double")
+    qdf = local_frame(df.sparkSession, [(float(q),) for q in quantiles], "q double")
     return (
         qdf.join(cum, F.col("cum").cast("double") >= F.col("q") * F.col("n").cast("double"))
         .groupBy("q")

@@ -17,7 +17,11 @@ from rheoceros_spark.functions.portable import (
     normalize_text,
     tokens,
 )
-from rheoceros_spark.operators.scale import checkpoint
+from rheoceros_spark.operators.scale import (
+    checkpoint,
+    local_frame,
+    observed_checkpoint,
+)
 
 # BPE-ish pre-tokenizer: letter runs, single digits, punctuation marks
 # (ASCII classes only — identical semantics in Java and RE2/PCRE).
@@ -2281,9 +2285,7 @@ def logreg_train(
 
     cur = {b: 0 for b in range(-1, n_buckets)}
     for _ in range(iters):
-        w = spark.createDataFrame(
-            sorted(cur.items()), "bucket int, wq bigint"
-        )
+        w = local_frame(spark, sorted(cur.items()), "bucket int, wq bigint")
         logits = (
             feats.join(F.broadcast(w), "bucket")
             .groupBy(id_col)
@@ -2314,7 +2316,7 @@ def logreg_train(
             cur[row["bucket"]] -= math.floor(
                 float(row["__gq"]) * lr / float(n)
             )
-    return spark.createDataFrame(sorted(cur.items()), "bucket int, wq bigint")
+    return local_frame(spark, sorted(cur.items()), "bucket int, wq bigint")
 
 
 def quality_classifier_score(
@@ -2370,19 +2372,16 @@ def exp_lut_q() -> list[int]:
     ]
 
 
-def _clamped_exp_q(logit_q_col, lut_lit, grid: float = 1e7):
-    """e^logit on the 1e6 grid via the broadcast LUT — floor + clamp +
-    1-based lookup, the :func:`_clamped_sigma_q` discipline.  ``grid``
-    is the integer grid the logit column lives on (1e11 for the
-    normalized-feature trainer: 1e-7 weights × 1e-4 features)."""
-    z100 = F.floor(
-        (logit_q_col.cast("double") / F.lit(grid)) * F.lit(100.0)
-    ).cast("bigint")
-    k = F.greatest(
-        F.lit(-EXP_CLAMP_Q).cast("bigint"),
-        F.least(F.lit(EXP_CLAMP_Q).cast("bigint"), z100),
-    )
-    return F.element_at(lut_lit, (k + F.lit(EXP_CLAMP_Q + 1)).cast("int"))
+#: e^v on the 1e6 grid for a logit ``v`` on the 1e-11 grid (1e-7
+#: weights × 1e-4 features), read from the model row's ``lut`` table —
+#: floor (exact on doubles) + clamp + 1-based lookup, the
+#: :func:`_clamped_sigma_q` discipline as SQL text (``D`` literals are
+#: doubles; a bare ``100.0`` would be a decimal)
+_EXP_Q_SQL = (
+    f"element_at(__m.lut, CAST(greatest(-{EXP_CLAMP_Q}L, least({EXP_CLAMP_Q}L, "
+    "CAST(floor((CAST(v AS DOUBLE) / 1E11D) * 100D) AS BIGINT))) "
+    f"+ {EXP_CLAMP_Q + 1} AS INT))"
+)
 
 
 def lang_classifier_train(
@@ -2412,27 +2411,36 @@ def lang_classifier_train(
       documents), so per-(doc, class) logits are exact BIGINT dot
       products on the 1e-11 grid (1e-7 weights × 1e-4 features) and
       bounded by the weight range, never by document length;
-    * softmax numerators come from the broadcast :func:`exp_lut_q`
-      table (no libm ``exp`` in either engine) and the probabilities
-      are integer ratios ``expq·1e7 div Σ expq`` — all operands
-      non-negative, so Spark ``div`` and DuckDB ``//`` agree;
+    * softmax numerators come from the :func:`exp_lut_q` table (no
+      libm ``exp`` in either engine) and the probabilities are integer
+      ratios ``expq·1e7 div Σ expq`` — all operands non-negative, so
+      Spark ``div`` and DuckDB ``//`` agree;
     * the per-(class, bucket) gradient ``Σ (pq − y·1e7)·cnt`` is an
       exact integer aggregate with map-side combine;
-    * updates re-quantize through ``floor`` (exact on doubles).
+    * updates re-quantize through ``floor`` (exact on doubles) on the
+      driver — the weight table is model-sized, K·(n_buckets+1) rows.
 
-    Scale shape per round: the weight table is K·(n_buckets+1) rows
-    (a few hundred for real language sets — always broadcastable); one
-    broadcast join fans the feature stream by K, one groupBy(id,
-    class) logit aggregate, a per-doc window for the softmax
-    denominator (K rows per doc — never data-sized), one groupBy
-    (class, bucket) gradient aggregate.  Two corpus-linear shuffles
-    per round, nothing data-sized on the driver; the feature frame is
-    materialized once and reused by every round.
+    Scale shape: the features are built once.  The
+    :func:`hashed_token_features_norm` rows are grouped into one
+    ``array<struct<bucket, cnt_q>>`` per document, the labels are
+    joined to them once, and the resulting (label, features) rows are
+    materialized by :func:`~rheoceros_spark.operators.scale.observed_checkpoint`,
+    whose same pass yields the row count ``n`` and, when ``classes``
+    is unset, the label set.  The duplicate-id contract of
+    :func:`hashed_token_features_norm` still holds: rows sharing an id
+    pool their features, and each of their labels trains against the
+    pooled array.  Each round reads ONE LocalRelation row — the flat
+    K·(n_buckets+1) weight array (K class lanes per bucket), the exp
+    LUT and the class list, as data rather than plan literals —
+    through a scalar subquery, which runs no job; the K logits, the
+    softmax and the K residuals are row-local array folds, and the
+    round ends in one groupBy(class, bucket) gradient aggregate (one
+    sample-linear shuffle) and one model-sized collect: two jobs per
+    round.  Nothing data-sized reaches the driver.
 
-    ``classes`` defaults to the sorted distinct non-NULL labels (one
-    bounded collect — label-space-sized, like the k-means centroid
-    reads).  Returns the trained (class, bucket, wq) table; bucket −1
-    is the per-class bias.
+    ``classes`` defaults to the sorted distinct non-NULL labels of the
+    training rows.  Returns the trained (class, bucket, wq) table as a
+    LocalRelation; bucket −1 is the per-class bias.
 
     ``train_frac`` bounds the TRAINING read (the
     :func:`_train_sample_gate` deterministic-hash sample on
@@ -2458,125 +2466,63 @@ def lang_classifier_train(
             f"lang_classifier_train: need iters >= 0 and n_buckets >= 1, "
             f"got {iters}, {n_buckets}"
         )
+    if classes is not None and not classes:
+        raise ValueError("lang_classifier_train: empty class set")
+    import json
+    import math
+
     spark = df.sparkSession
     base = df.where(F.col(id_col).isNotNull() & F.col(label_col).isNotNull())
     base = _train_sample_gate(base, id_col, train_frac, sample_seed)
-    if classes is None:
-        classes = sorted(
-            r[0] for r in base.select(label_col).distinct().collect()
-        )
-    if not classes:
-        raise ValueError("lang_classifier_train: empty class set")
-    feats = checkpoint(
+    pooled = (
         hashed_token_features_norm(base, text_col, id_col, n_buckets, seed, ngram_range)
+        .groupBy(id_col)
+        .agg(F.collect_list(F.struct("bucket", "cnt_q")).alias("__f"))
     )
-    labels = base.select(F.col(id_col), F.col(label_col).alias("__label"))
-    n = labels.count()  # one scalar action, like logreg_train's
+    labelled = pooled.join(
+        base.select(F.col(id_col), F.col(label_col).alias("__y")), id_col
+    ).select("__y", "__f")
+    metrics = [F.count(F.lit(1))]
+    if classes is None:
+        metrics.append(F.to_json(F.array_sort(F.collect_set("__y"))))
+    docs, values = observed_checkpoint(labelled, *metrics)
+    if classes is None:
+        classes = json.loads(values[1])
+        if not classes:
+            raise ValueError("lang_classifier_train: empty class set")
+    n = values[0]
     if n == 0:
         raise ValueError("lang_classifier_train: empty training frame")
-    lut = _int_array_lit(exp_lut_q(), "bigint")
-    # r14 driver-update rewrite (guide §5; the logreg_train rationale):
-    # the weight table is MODEL-sized — K·(n_buckets+1) rows — so the
-    # round update is a bounded driver collect + exact Python update
-    # instead of a per-round join + lazy localCheckpoint whose toRdd
-    # planning (~1 s/round of driver latency) and broadcast-build jobs
-    # dominated training fixed cost.  Same IEEE update sequence as the
-    # old in-plan expression (float(decimal)·lr/(n·scale), floored) —
-    # bit-identical weights, parity pinned by the oracle rows.
-    import math
-
+    k = len(classes)
+    lut = exp_lut_q()
     cur = {(c, b): 0 for c in classes for b in range(-1, n_buckets)}
-    sorted_classes = sorted(classes)
-    n_cls = len(classes)
     for _ in range(iters):
-        # r14 shuffle-shape rewrite (guide §2.3/§2.4): the previous
-        # iteration shape fanned feats × K class-rows and ran TWO
-        # corpus-scale exchanges — groupBy(id, class) for the logits
-        # (n·K rows) and a partitionBy(id) window for the softmax
-        # denominator (n·K rows again).  The class dimension is a
-        # driver-known list, so the K per-class logits now come from K
-        # map-side-combined SUMs in ONE groupBy(id) hash aggregate
-        # (n output rows, K columns — K× fewer shuffled rows, one
-        # exchange fewer) and the denominator is a row-local sum over
-        # the K logit columns, no window at all.  Every integer is
-        # unchanged: per-(id, class) logit sums add the same BIGINT
-        # addends, the clamped-exp LUT reads the same __lq, and the
-        # denominator is the same exact BIGINT total (addition order
-        # is irrelevant for exact integers).
-        # class-sorted wq ARRAY per bucket (r14, the scorer's shape):
-        # element_at on an array is O(1) per lookup where a literal
-        # map's GetMapValue scans its string keys; pos[] translates the
-        # class list to sorted positions so explicit unsorted `classes`
-        # still read the right lane
-        pos = {c: i for i, c in enumerate(sorted_classes)}
-        # class-sorted lane array per bucket, built driver-side (the
-        # old groupBy + array_sort(collect_list(struct)) over the tiny
-        # weight frame produced exactly this: lanes ordered by class
-        # ascending — classes are distinct per bucket, so the struct
-        # sort IS the class sort)
-        wp = spark.createDataFrame(
-            [
-                (b, [cur[(c, b)] for c in sorted_classes])
-                for b in range(-1, n_buckets)
-            ],
-            "bucket int, __wa array<bigint>",
+        # the round's model as one LocalRelation row, read by a scalar
+        # subquery: lane i of bucket b at (b+1)·K + i of ``wa``, the exp
+        # LUT and the class lanes.  A broadcast join of the same row
+        # would run one more job per round (the broadcast collects its
+        # side through a job; the subquery reads the local rows)
+        model = local_frame(
+            spark,
+            [(([cur[(c, b)] for b in range(-1, n_buckets) for c in classes], lut, classes),)],
+            "m struct<wa: array<bigint>, lut: array<bigint>, cls: array<string>>",
         )
-        logits = (
-            feats.join(F.broadcast(wp), "bucket")
-            .groupBy(id_col)
-            .agg(
-                *[
-                    F.sum(
-                        F.element_at(F.col("__wa"), pos[c] + 1)
-                        * F.col("cnt_q")
-                    ).alias(f"__lq{i}")
-                    for i, c in enumerate(classes)
-                ]
-            )
-        )
-        scored = logits.select(
-            F.col(id_col),
-            *[
-                _clamped_exp_q(F.col(f"__lq{i}"), lut, grid=1e11).alias(
-                    f"__eq{i}"
-                )
-                for i in range(n_cls)
-            ],
-        ).withColumn(
-            "__den",
-            sum(F.col(f"__eq{i}") for i in range(1, n_cls)) + F.col("__eq0")
-            if n_cls > 1
-            else F.col("__eq0"),
-        )
+        # row-local K-lane logits → LUT exp → integer softmax →
+        # residuals pq − y·1e7
         resid = (
-            scored.join(labels, id_col)
-            .select(
-                F.col(id_col),
-                F.col("__label"),
-                F.explode(
-                    F.array(
-                        *[
-                            F.struct(
-                                F.lit(c).alias("class"),
-                                F.expr(
-                                    f"__eq{i} * 10000000L div __den"
-                                ).alias("__pq"),
-                            )
-                            for i, c in enumerate(classes)
-                        ]
-                    )
-                ).alias("__e"),
+            docs.select("__y", "__f", model.scalar().alias("__m"))
+            .selectExpr(
+                "__y", "__f", "__m",
+                f"transform(sequence(0, {k - 1}), i -> aggregate(__f, 0L, "
+                f"(a, x) -> a + element_at(__m.wa, (x.bucket + 1) * {k} + i + 1)"
+                " * x.cnt_q)) AS __lq",
             )
-            .select(
-                F.col(id_col),
-                F.col("__e.class").alias("class"),
-                (
-                    F.col("__e.__pq")
-                    - F.when(
-                        F.col("__e.class") == F.col("__label"),
-                        F.lit(10_000_000),
-                    ).otherwise(F.lit(0))
-                ).alias("__rq"),
+            .selectExpr("__y", "__f", "__m", f"transform(__lq, v -> {_EXP_Q_SQL}) AS __eq")
+            .selectExpr("*", "aggregate(__eq, 0L, (a, v) -> a + v) AS __den")
+            .selectExpr(
+                "__f", "__m",
+                "transform(__eq, (v, i) -> (v * 10000000L div __den)"
+                " - IF(element_at(__m.cls, i + 1) = __y, 10000000L, 0L)) AS __rq",
             )
         )
         # per-row |__rq·cnt_q| ≤ 1e7·1e4 = 1e11 fits BIGINT, but the
@@ -2586,13 +2532,13 @@ def lang_classifier_train(
         # ~1e27-doc headroom; __gq is only ever consumed via a double
         # cast, so the widening is bit-neutral.
         grads = (
-            resid.join(feats, id_col)
-            .groupBy("class", "bucket")
-            .agg(
-                F.sum(
-                    (F.col("__rq") * F.col("cnt_q")).cast("decimal(38,0)")
-                ).alias("__gq")
+            resid.selectExpr(
+                "inline(flatten(transform(__f, x -> transform(__rq, (r, i) -> "
+                "named_struct('class', element_at(__m.cls, i + 1), "
+                "'bucket', x.bucket, '__g', r * x.cnt_q)))))"
             )
+            .groupBy("class", "bucket")
+            .agg(F.expr("sum(CAST(__g AS DECIMAL(38,0)))").alias("__gq"))
         )
         # __gq is on the 1e-11 grid (1e-7 residual × 1e-4 feature); the
         # extra FEAT_NORM_SCALE divisor returns the update to the 1e-7
@@ -2601,7 +2547,8 @@ def lang_classifier_train(
             cur[(row["class"], row["bucket"])] -= math.floor(
                 float(row["__gq"]) * lr / float(n * FEAT_NORM_SCALE)
             )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(c, b, q) for (c, b), q in sorted(cur.items())],
         "class string, bucket int, wq bigint",
     )
@@ -2627,58 +2574,52 @@ def lang_classifier_score(
     weights × 1e-4 normalized features).  ``ngram_range`` must match
     what the weights were trained with.
 
-    Scale shape (r14, guide §2.3/§2.4 — the trainer-iteration rewrite
-    applied to the scoring pass): the previous shape fanned the
-    feature stream ×K through the broadcast weight join and shuffled
-    n·K rows twice (groupBy(id, class) logits, then a groupBy(id)
-    argmax).  The class dimension is list-sized and driver-known, so
-    the K per-class logits are now K map-side-combined SUMs in ONE
-    groupBy(id) hash aggregate over a broadcast bucket→wq-array table
-    (class-sorted, position-indexed — O(1) per lookup) — K× fewer
-    aggregate-input rows, K× fewer shuffled rows, one exchange and one
-    aggregate fewer — and the argmax is a row-local
-    ``array_min`` over (−logit, class) structs, the same comparator as
-    the grouped ``min(struct)``.  Every integer is unchanged: each
-    per-class sum adds the same BIGINT addends (order-free), so the
-    output is bit-identical.
+    Scale shape: the model-sized weight table — K·(n_buckets+1) rows —
+    is read once with ``collect()`` (no job when it is the trainer's
+    LocalRelation) and turned on the driver into a bucket→K-lane
+    ``array<bigint>`` LocalRelation, lane i holding ``classes[i]``.
+    The K per-class logits are K map-side-combined SUMs in ONE
+    groupBy(id) hash aggregate over the broadcast of that table
+    (position-indexed lanes, O(1) per lookup), and the argmax is a
+    row-local ``array_min`` over (−logit, class) structs, the same
+    comparator as the grouped ``min(struct)``.  One corpus-linear
+    shuffle; duplicate ids pool their features, as in
+    :func:`hashed_token_features_norm`.
 
-    ``classes`` (optional) names the classes to score; default reads
-    the distinct classes off the weight table — one weight-table-sized
-    driver action (the :func:`lang_classify_rowlocal` tier).  The
-    weight table must be the full class×bucket grid the trainer emits
-    (one row per pair); sparse tables should pass through the trainer
-    first."""
+    ``classes`` (optional) names the classes to score, default every
+    class of the weight table; a name the table lacks is rejected.
+    The table should be the full class×bucket grid the trainer emits;
+    a missing (class, bucket) pair weighs 0."""
     feats = hashed_token_features_norm(
         df, text_col, id_col, n_buckets, seed, ngram_range
     )
+    by_class: dict[str, dict[int, int]] = {}
+    for r in weights.collect():
+        by_class.setdefault(r["class"], {})[int(r["bucket"])] = int(r["wq"])
     if classes is None:
-        classes = sorted(
-            r[0] for r in weights.select("class").distinct().collect()
-        )
+        classes = sorted(by_class)
     if not classes:
         raise ValueError("lang_classifier_score: empty weight table")
-    # class-sorted wq ARRAY per bucket, indexed by position — a literal
-    # map's GetMapValue is a linear string-key scan per lookup, while
-    # element_at on an array is O(1); array_sort on the (class, wq)
-    # struct pins the order, and pos[] translates the caller's class
-    # list to sorted positions so an unsorted `classes` still reads the
-    # right lane
-    pos = {c: i for i, c in enumerate(sorted(classes))}
-    wp = weights.groupBy("bucket").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("class", "wq"))),
-            lambda s: s["wq"],
-        ).alias("__wa")
+    unknown = sorted(set(classes) - set(by_class))
+    if unknown:
+        raise ValueError(
+            f"lang_classifier_score: classes {unknown} are not in the weight table"
+        )
+    buckets = sorted({b for w in by_class.values() for b in w})
+    wp = local_frame(
+        df.sparkSession,
+        [(b, [by_class[c].get(b, 0) for c in classes]) for b in buckets],
+        "bucket int, __wa array<bigint>",
     )
     logits = (
         feats.join(F.broadcast(wp), "bucket")
         .groupBy(id_col)
         .agg(
             *[
-                F.sum(
-                    F.element_at(F.col("__wa"), pos[c] + 1) * F.col("cnt_q")
-                ).alias(f"__lq{i}")
-                for i, c in enumerate(classes)
+                F.sum(F.element_at(F.col("__wa"), i + 1) * F.col("cnt_q")).alias(
+                    f"__lq{i}"
+                )
+                for i in range(len(classes))
             ]
         )
     )
@@ -3193,11 +3134,7 @@ def sif_embed(
         )
     else:  # impl == "join"
         spark = df.sparkSession
-        wdf = spark.createDataFrame(
-            list(weights.items()) or [("", 0)], "token string, wq bigint"
-        )
-        if not weights:
-            wdf = wdf.where(F.lit(False))
+        wdf = local_frame(spark, list(weights.items()), "token string, wq bigint")
         exploded = ensure_parallelism(
             base.select(F.col(id_col).alias("__id"), toks_f.alias("__toks"))
         ).select("__id", F.explode("__toks").alias("token"))

@@ -8,6 +8,7 @@ Usage: python scripts/check_oracle.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 from datetime import date, datetime
@@ -15,7 +16,7 @@ from decimal import Decimal
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
@@ -75,7 +76,6 @@ def main():
         extra_confs={"spark.ui.enabled": "false", "spark.driver.memory": "16g"},
     )
     con = duckdb.connect()
-    import os
 
     for t in TABLES:
         path = f"{sf_dir}/{t}.parquet"
@@ -151,7 +151,7 @@ def main():
                     detail.append(f"first diff:\n  spark: {a[:200]}\n  duck : {b[:200]}")
                     break
         results[name] = "OK" if status == "✓" else "; ".join(detail)
-        print(f"{status} {name} ({len(srows)} rows) [{time.time()-t0:.1f}s]" + ("" if status == "✓" else f"\n   {results[name]}"))
+        print(f"{status} {name} ({len(srows)} rows, hash {sh}) [{time.time()-t0:.1f}s]" + ("" if status == "✓" else f"\n   {results[name]}"))
 
     bad = {k: v for k, v in results.items() if v not in ("OK",) and not v.startswith("rows-only")}
     print(f"\n{len(names) - len(bad)}/{len(names)} OK")

@@ -9,9 +9,11 @@ Usage: python scripts/explain_audit.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
 
 from rheoceros_spark.session import get_session  # noqa: E402
 
@@ -194,7 +196,7 @@ def main() -> None:
             df._jdf.queryExecution(), "formatted"
         )
         out.append(f"## {name}\n\n```\n{plan.strip()}\n```\n")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(_ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md ({len(AUDIT)} plans)")
 

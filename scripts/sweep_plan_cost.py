@@ -12,10 +12,11 @@ Usage: python scripts/sweep_plan_cost.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import re
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 from rheoceros_spark.session import get_session

@@ -11,6 +11,7 @@ import rheoceros_spark
 from rheoceros_spark.operators.scale import (
     bucketed_join,
     observed_checkpoint,
+    restore_confs,
     salted_aggregate,
     salted_join,
     write_bucketed,
@@ -27,6 +28,7 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
         orders.withColumnRenamed("o_orderkey", "l_orderkey"),
         "ord_b", ["l_orderkey"], 8, sort_cols=["l_orderkey"], path=f"{wh}/ord_b",
     )
+    prev_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", None)
     try:
         joined = bucketed_join(spark, "li_b", "ord_b", ["l_orderkey"])
         # force non-broadcast so the bucketing is what saves the shuffle
@@ -38,7 +40,7 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
         exp = li.join(orders, li.l_orderkey == orders.o_orderkey).count()
         assert joined.count() == exp
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+        restore_confs(spark, {"spark.sql.autoBroadcastJoinThreshold": prev_bc})
         spark.sql("DROP TABLE IF EXISTS li_b")
         spark.sql("DROP TABLE IF EXISTS ord_b")
 
@@ -220,7 +222,7 @@ class TestRuntimeFilters:
         baseline = {(r.o_orderpriority, r.n) for r in join().collect()}
         prev = enable_runtime_filters(spark)
         # force the sort-merge path the filter exists for
-        prev_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        prev_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", None)
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
             df = join()
@@ -228,8 +230,9 @@ class TestRuntimeFilters:
             assert "might_contain" in plan.lower()
             assert {(r.o_orderpriority, r.n) for r in df.collect()} == baseline
         finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bc)
-            restore_confs(spark, prev)
+            restore_confs(
+                spark, {**prev, "spark.sql.autoBroadcastJoinThreshold": prev_bc}
+            )
 
     def test_bloom_filter_measurably_prunes_fact_rows(self, spark):
         """The plan gate alone ('might_contain' present) doesn't prove
@@ -245,7 +248,7 @@ class TestRuntimeFilters:
             F.col("o_orderpriority") == "1-URGENT"  # ~1/5 of orders
         )
         prev = enable_runtime_filters(spark)
-        prev_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        prev_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", None)
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
             df = (
@@ -289,8 +292,9 @@ class TestRuntimeFilters:
                 f"bloom filter did not prune: scan={scan_rows} filter={filt_rows}"
             )
         finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bc)
-            restore_confs(spark, prev)
+            restore_confs(
+                spark, {**prev, "spark.sql.autoBroadcastJoinThreshold": prev_bc}
+            )
 
     def test_restore_round_trips(self, spark):
         from rheoceros_spark.operators.scale import (
@@ -351,3 +355,42 @@ def test_materialization_lives_only_in_scale():
         if (rel, m.group()) != ("sources/io.py", ".observe(")
     ]
     assert not hits, "\n".join(hits)
+
+
+def test_local_frame_is_a_job_free_local_relation(spark):
+    import math
+
+    from pyspark.sql.types import StructType
+
+    from rheoceros_spark.operators.scale import collect_local, local_frame
+
+    schema = (
+        "i int, b bigint, d double, s string, a array<double>, "
+        "n array<bigint>, st struct<k:int,v:string>"
+    )
+    rows = [
+        (1, 2**63 - 1, 0.1 + 0.2, "x", [1e-300, -0.0, None], [-(2**63)], (7, "y")),
+        (None, None, None, None, None, None, None),
+        (-2, -5, float("inf"), "", [], [None], (None, None)),
+    ]
+    sc = spark.sparkContext
+    sc.setJobGroup("local_frame_test", "local_frame_test")
+    try:
+        df = local_frame(spark, rows, schema)
+        got = df.collect()
+        empty = local_frame(spark, [], StructType.fromDDL("t string, w bigint"))
+        assert empty.collect() == []
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events are async
+        jobs = sc.statusTracker().getJobIdsForGroup("local_frame_test")
+    finally:
+        sc._jsc.clearJobGroup()
+    assert list(jobs) == [], jobs
+    plan = df._jdf.queryExecution().analyzed().getClass().getSimpleName()
+    assert plan == "LocalRelation", plan
+    assert df.schema == StructType.fromDDL(schema)
+    assert [tuple(r) for r in got] == rows
+    assert math.copysign(1.0, got[0].a[1]) == -1.0  # -0.0 keeps its sign
+    # collect_local rebuilds through the same path
+    again, n = collect_local(df)
+    assert n == 3 and [tuple(r) for r in again.collect()] == rows
+    assert again._jdf.queryExecution().analyzed().getClass().getSimpleName() == "LocalRelation"
